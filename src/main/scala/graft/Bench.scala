@@ -205,6 +205,9 @@ object Bench {
     val taskSamples = scala.collection.mutable.Map
       .empty[String, scala.collection.mutable.ListBuffer[(Long, Long)]]
     val passCalibs = scala.collection.mutable.ListBuffer.empty[Double]
+    // a query that throws on any pass is reported by name, keeps no
+    // sample (a failure's wall is not a timing) and fails the run
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     def runPass(qs: Seq[(String, (SparkSession, String) =>
         org.apache.spark.sql.DataFrame)]): Unit = {
       val calib = calibrate()
@@ -214,22 +217,37 @@ object Bench {
         val h0 = hostTicks(); val self0 = selfTicks()
         val tm0 = taskMsAcc.get(); val tc0 = taskCountAcc.get()
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        val ok =
+          try { fn(spark, sfDir).count(); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+            false
+          }
         val dt = (System.nanoTime() - t0) / 1e9
         val w = window(h0, self0)
         // queries may cache intermediates they reuse across branches;
         // don't let one query's cache skew the next one's measurement
         spark.catalog.clearCache()
-        samples.getOrElseUpdate(name,
-          scala.collection.mutable.ListBuffer.empty) += ((dt, w, calib, passIdx))
-        taskSamples.getOrElseUpdate(name,
-          scala.collection.mutable.ListBuffer.empty) +=
-          ((taskMsAcc.get() - tm0, taskCountAcc.get() - tc0))
+        if (!ok) {
+          failed += name
+          samples.remove(name)
+          taskSamples.remove(name)
+        } else if (!failed(name)) {
+          samples.getOrElseUpdate(name,
+            scala.collection.mutable.ListBuffer.empty) += ((dt, w, calib, passIdx))
+          taskSamples.getOrElseUpdate(name,
+            scala.collection.mutable.ListBuffer.empty) +=
+            ((taskMsAcc.get() - tm0, taskCountAcc.get() - tc0))
+        }
       }
     }
+    def failedJson: String =
+      failed.map(n => "\"" + n + "\"").mkString("[", ",", "]")
     calibrate() // JIT the calibration loop itself before the first use
     runPass(ordered)
     runPass(ordered)
+    // only queries that never failed are retried and reported
+    def timed = ordered.filterNot(q => failed(q._1))
     // retry budget anchored AFTER the base passes, so a contended
     // (slow) base run cannot eat it — retries matter most exactly
     // when the base passes were slow. ~6 min of retry room on top of
@@ -241,14 +259,14 @@ object Bench {
     // retry phase below (driver timeout, OOM), the base min-of-2
     // result survives on disk instead of the run producing nothing
     try {
-      val prov = ordered.map { case (n, _) =>
+      val prov = timed.map { case (n, _) =>
         s"\"" + n + "\":" + samples(n).map(_._1).min }
         .mkString("{", ",", "}")
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get("target"))
       java.nio.file.Files.write(
         java.nio.file.Paths.get("target/bench_last.json"),
         (s"""{"metric":"total","value":${samples.values.map(_.map(_._1).min).sum},""" +
-          s""""unit":"sec","runs":$Runs,"provisional":1,"queries":$prov,"sf":"$sfDir"}""" +
+          s""""unit":"sec","runs":$Runs,"provisional":1,"failed":$failedJson,"queries":$prov,"sf":"$sfDir"}""" +
           "\n").getBytes("UTF-8"))
     } catch { case _: Throwable => () }
     // A query's number is trustworthy once it has ≥1 sample measured
@@ -289,7 +307,7 @@ object Bench {
       }
     }
     var extraRounds = 0
-    var need = ordered.filter(q => !settled(q._1))
+    var need = timed.filter(q => !settled(q._1))
     while (need.nonEmpty && extraRounds < 3 &&
         System.currentTimeMillis() < deadlineMs) {
       waitQuiet()
@@ -299,10 +317,10 @@ object Bench {
       if (System.currentTimeMillis() < deadlineMs) {
         runPass(need)
         extraRounds += 1
-        need = ordered.filter(q => !settled(q._1))
+        need = timed.filter(q => !settled(q._1))
       }
     }
-    val results = ordered.map { case (name, _) =>
+    val results = timed.map { case (name, _) =>
       name -> samples(name).map(_._1).min
     }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
@@ -310,9 +328,9 @@ object Bench {
     // per-query sample counts + whether any sample was quiet-window:
     // round-over-round comparisons can then account for differing
     // sample sizes instead of comparing min-of-2 against min-of-4
-    val passCounts = ordered.map { case (name, _) =>
+    val passCounts = timed.map { case (name, _) =>
       s"\"" + name + "\":" + samples(name).size }.mkString("{", ",", "}")
-    val quietFlags = ordered.map { case (name, _) =>
+    val quietFlags = timed.map { case (name, _) =>
       s"\"" + name + "\":" +
         (if (samples(name).exists(trusted)) 1 else 0)
     }.mkString("{", ",", "}")
@@ -325,24 +343,24 @@ object Bench {
     // pass index each query's min sample came from (indexes calib_ms):
     // lets a cross-round comparison normalize per QUERY by the calib
     // of the pass that actually produced its number
-    val minPassByName = ordered.map { case (name, _) =>
+    val minPassByName = timed.map { case (name, _) =>
       name -> samples(name).minBy(_._1)._4 }
     val minPass = minPassByName.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     // CPU-contract evidence for the min-wall sample of each query:
     // summed executor task time (sec, 3 dp) and task count — see the
     // listener comment above. task_sec/wall ≈ effective parallelism.
-    val minIdxByName = ordered.map { case (name, _) =>
+    val minIdxByName = timed.map { case (name, _) =>
       name -> samples(name).zipWithIndex.minBy(_._1._1)._2 }.toMap
-    val taskSec = ordered.map { case (name, _) =>
+    val taskSec = timed.map { case (name, _) =>
       f""""$name":${taskSamples(name)(minIdxByName(name))._1 / 1000.0}%.3f"""
     }.mkString("{", ",", "}")
-    val taskCounts = ordered.map { case (name, _) =>
+    val taskCounts = timed.map { case (name, _) =>
       s"\"" + name + "\":" + taskSamples(name)(minIdxByName(name))._2
     }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","runs":$Runs,"extra_rounds":$extraRounds,"parallelism":${spark.sparkContext.defaultParallelism},"calib_ms":$calibs,"passes":$passCounts,"quiet":$quietFlags,"min_pass":$minPass,"task_sec":$taskSec,"tasks":$taskCounts,"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","runs":$Runs,"extra_rounds":$extraRounds,"parallelism":${spark.sparkContext.defaultParallelism},"calib_ms":$calibs,"passes":$passCounts,"quiet":$quietFlags,"min_pass":$minPass,"task_sec":$taskSec,"tasks":$taskCounts,"failed":$failedJson,"queries":$qs,"sf":"$sfDir"}"""
     // The driver archives only the LAST 2000 chars of output into
     // BENCH_rN.json, and the main line puts calib_ms/value before the
     // 100+ query entries — the truncation used to eat exactly the
@@ -352,14 +370,14 @@ object Bench {
     // into calib_ms.
     val minPassArr = minPassByName.map(_._2).mkString("[", ",", "]")
     val tail =
-      s"""{"calib_ms":$calibs,"total":$total,"extra_rounds":$extraRounds,"min_pass":$minPassArr}"""
+      s"""{"calib_ms":$calibs,"total":$total,"extra_rounds":$extraRounds,"min_pass":$minPassArr,"failed":$failedJson}"""
     // compact per-query times (3 decimals — the full-precision map in
     // the main line runs ~4.5 kB and the driver archives only a 2 kB
     // output window, so the head of the query map was lost to
     // truncation for 14 rounds; this line, printed FIRST, keeps a
     // self-contained copy adjacent to whichever window edge survives,
     // and target/bench_last.json remains the complete record)
-    val qCompact = ordered.map { case (name, _) =>
+    val qCompact = timed.map { case (name, _) =>
       f""""$name":${samples(name).map(_._1).min}%.3f""" }
       .mkString("""{"queries":{""", ",", "}}")
     // Emit robustly: a contended driver run once truncated this line
@@ -379,5 +397,9 @@ object Bench {
         (line + "\n" + tail + "\n" + qCompact + "\n").getBytes("UTF-8"))
     } catch { case _: Throwable => () }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -319,14 +319,6 @@ object MultimodalOps {
 
   private val imgFrame = payloadFrame(phashFixture) _
 
-  /** Diagnostic hooks for graft.tools.BandProbe (test scope). */
-  private[graft] def mm6Frame(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = imgFrame(df, 8, 1)
-  private[graft] def bandedProbe(sig: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = banded(sig)
-  private[graft] def mm9Frame(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = audioFrame(df, 9, 2)
-
   /** Explode a signature frame into its TWO-LEVEL hamming band keys.
     * Level 1: 8 bands of 8 bits — pigeonhole gives hamming ≤ 7 ⇒ ≥ 1
     * equal band. But 8 bands × 256 values is only 2,048 distinct
@@ -604,22 +596,11 @@ object MultimodalOps {
 
   /** Apply one churn batch of images to the maintained perceptual-hash
     * index — the ingest-time image-dedup shape of a 100 TB multimodal
-    * corpus (the mm analog of [[NearDupIndex.reconcile]], simpler
-    * because the 16-byte signature IS the verification artifact: no
-    * re-decode of candidates, exact hamming comes straight off the
-    * stored halves).
-    *
-    * State = a SIGNATURE STORE keyed by doc_id (hash halves; updates
-    * are plain upserts, preCombine keeps the newest) and a PAIRS
-    * table keyed (a, b) holding the SKEW-COLLAPSED pair set — the
-    * [[pairsFromSigs]] contract (star edges inside byte-equal
-    * signature groups, one cross pair per group pair), so a cluster
-    * of k identical payloads persists k-1 rows, never O(k²). Cost is
-    * O(churn + affected-group size) per call: only churn payloads are
-    * decoded/hashed; candidates come from affected-group reps
-    * band-probed against the store's group reps; the pairs
-    * reconciliation is ONE mixed upsert+tombstone commit. No
-    * full-corpus decode stage after bootstrap. */
+    * corpus: [[NearDupIndex.reconcileWith]] over a 64-bit signature.
+    * The 16-byte signature IS the verification artifact: no re-decode
+    * of candidates, exact hamming comes straight off the stored halves.
+    * Only churn payloads are decoded/hashed; a churn payload with no
+    * signature is tombstoned out of the index and counted dropped. */
   private[graft] def phashReconcile(
       churnImgs: org.apache.spark.sql.DataFrame,
       deletedIds: org.apache.spark.sql.DataFrame,
@@ -628,485 +609,46 @@ object MultimodalOps {
       ts: Long,
       // the ONE modality-specific step: payload frame → (doc_id,
       // hash_hi, hash_lo). Default = image aHash (mm7); mm10 passes
-      // the audio envelope hash — everything downstream (banding,
-      // store probe, mixed reconcile commit) is signature-generic.
+      // the audio envelope hash, mm12 the video majority fold.
       hashFn: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
         graft.multimodal.MediaDecoder.aHash(_, "doc_id", "payload"),
       // commit tag for the PAIRS reconciliation — the LAST write, so
       // "tag present ⇒ whole batch (sigs included) committed" holds
-      // for a streaming ExactlyOnce guard (the NearDupIndex ordering
-      // invariant); None for the batch gates
+      // for a streaming ExactlyOnce guard; None for the batch gates
       tag: Option[String] = None,
       // optional band-posting index (blk, doc_id, hash_hi, hash_lo,
       // ts) keyed (blk, doc_id) with statsColumns (blk, ts) — the
-      // [[NearDupIndex.reconcile]] postings contract: maintained in
-      // lockstep, it replaces the per-batch store-wide rep scan +
-      // 64-key explode with a file-pruned posting read. Attach from
-      // the store's bootstrap batch or drop/recreate all three.
-      postings: Option[graft.core.LakeTable] = None): ReconcileStats = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val cached = scala.collection.mutable.ListBuffer
-      .empty[org.apache.spark.sql.DataFrame]
-    def cache(df: org.apache.spark.sql.DataFrame) = {
-      cached += df.persist(); df
-    }
-    // cache + TRUNCATE THE LOGICAL PLAN (lazy localCheckpoint) at the
-    // frames every later relation embeds — the [[NearDupIndex]] fix,
-    // same reasoning: self-referencing relations duplicate subtrees
-    // per reference, and by the pairs write the plan tree is in the
-    // 10⁵-node range, putting seconds of pure Catalyst/AQE driver
-    // work inside one tiny commit (guide §3.3). Checkpoint blocks are
-    // freed by the ContextCleaner; every truncated frame is O(churn).
-    def pin(df: org.apache.spark.sql.DataFrame) = df.localCheckpoint(false)
-    var sigWrite: Future[Any] = Future.successful(())
-    var postWrite: Future[Any] = Future.successful(())
-    // env-gated (GRAFT_PROFILE=1) stage timing, the write-path
-    // profiler's read-side sibling — a no-op otherwise
-    val profT0 = System.nanoTime()
-    def prof(stage: String): Unit =
-      if (sys.env.get("GRAFT_PROFILE").contains("1"))
-        Console.err.println(f"[graft-profile] phashReconcile:$stage%-24s " +
-          f"${(System.nanoTime() - profT0) / 1e9}%7.3fs")
-    try {
-      // plans pinned BEFORE the writes below (snapshot() resolves its
-      // file list eagerly); a never-written store/pairs table has a
-      // schema-only snapshot — the bootstrap branches
-      val preStore = sigs.snapshot()
-      val storeWasEmpty = !preStore.columns.contains("hash_lo")
-      // the store PERSISTS each row's group representative (rep =
-      // min doc_id over byte-equal signatures, maintained by this
-      // reconcile): unaffected groups' reps read back filter-only, so
-      // no per-batch window pass over the whole store — the full-store
-      // sort was the streaming service's dominant fixed cost. A store
-      // written before the rep column cannot be reconciled
-      // incrementally — drop/recreate sigs AND pairs and rebuild with
-      // a bootstrap reconcile.
-      require(storeWasEmpty || (preStore.columns.contains("rep") &&
-          preStore.columns.contains("ts")),
-        "signature store predates the persisted-rep contract (no rep/" +
-          "ts column) - drop/recreate the sigs AND pairs tables and " +
-          s"rebuild with a bootstrap reconcile: ${sigs.basePath}")
-      val pairsSnap = pairs.snapshot()
-      val pairsBootstrap = !pairsSnap.columns.contains("a")
-      // NULL-hash guard: hashFn's contract is "no row for a payload
-      // with no signature", but a variant that emits NULL halves
-      // instead would otherwise collapse every such doc into ONE
-      // group under the rep window (shared rep, bogus hamming-0 star
-      // edges). Filtering here makes a NULL-hash row mean the same
-      // thing as an absent row — the doc joins the undecodable
-      // tombstone side below and drops out of the index.
-      val newSigs = cache(pin(hashFn(churnImgs)
-        .filter(col("hash_hi").isNotNull && col("hash_lo").isNotNull)))
-      // ids whose stored signature this batch may retire: every churn
-      // payload (hashed or not — an undecodable churn doc leaves the
-      // index, see delC below) plus explicit deletes. Derivable from
-      // the INPUTS alone, so the old-signature lookup — a narrow
-      // 3-column store scan, never the heavy full-row read — can run
-      // on a background thread WHILE the churn decode+hash
-      // materializes on this one (the two dominate the pre-write
-      // serial prefix; overlapped they cost ~max, not sum).
-      val churnIds = cache(churnImgs.select("doc_id")
-        .unionByName(deletedIds).distinct())
-      val oldSigsOfTouched =
-        if (storeWasEmpty) newSigs.limit(0).select("hash_hi", "hash_lo")
-        else preStore.select("doc_id", "hash_hi", "hash_lo")
-          .join(churnIds, Seq("doc_id"), "leftsemi")
-          .select("hash_hi", "hash_lo")
-      // CRASH-REPLAY widening (the [[NearDupIndex.reconcile]]
-      // invariant, same reasoning): if attempt 1 at THIS batch
-      // committed the signature write and died before the tagged
-      // pairs commit, the store already reflects attempt 1 — a
-      // departed doc has no row and a re-hashed doc carries its NEW
-      // signature, so churn-derived oldSigsOfTouched misses its OLD
-      // group. Attempt 1 stamped every member of every affected group
-      // with THIS ts, so "store signatures written at ts" recovers
-      // exactly its affected-group set; on a clean first run the
-      // store holds only older stamps and this arm is empty. Read
-      // through the ts-pruned snapshotSkipping path: every clustered
-      // base file predates this batch and skips, only the delta tail
-      // is read. Plans pinned NOW, before the background write.
-      // replay detection is a DRIVER-SIDE metadata check, not a scan:
-      // the signature write below carries its own commit tag —
-      // '<tag>:sigs' for tagged (streaming) callers, the synthesized
-      // 'rcsigs:<ts>' for untagged batch callers — so the
-      // sigs-committed/pairs-uncommitted crash window is visible as
-      // that tag already on the sigs timeline and a clean first run
-      // pays NOTHING here (previously every untagged call paid a full
-      // ts-pruned store scan for the always-on conservative widening;
-      // a contract-violating ts reuse only triggers a spurious
-      // widening, which re-derives already-correct edges).
-      // reserved marker prefix + LEGACY-STORE transition guard — the
-      // [[NearDupIndex.reconcile]] rules, same reasoning: no caller tag
-      // may alias a replay marker, and a store carrying untagged sigs
-      // data commits (written by pre-protocol code, whose crash window
-      // the tag probe cannot see) falls back to conservative widening.
-      require(tag.forall(t => !t.startsWith("rcsigs")),
-        s"caller tag must not use the reserved 'rcsigs' prefix: $tag")
-      val sigsTag = Some(tag.map(_ + ":sigs").getOrElse(s"rcsigs:$ts"))
-      val sigsCommits = sigs.timeline.commits()
-      val replayed = sigsTag.exists(t0 =>
-        sigsCommits.exists(_.tag.contains(t0))) ||
-        (!storeWasEmpty && sigsCommits.exists(c => c.tag.isEmpty &&
-          (c.action == "deltacommit" || c.action == "upsert")))
-      val replaySigs =
-        if (storeWasEmpty || !replayed)
-          newSigs.limit(0).select("hash_hi", "hash_lo")
-        else sigs.snapshotSkipping(Seq(graft.core.ColPred(
-            "ts", "eq", Seq(ts.toString), isLong = true)))._1
-          .filter(col("ts") === lit(ts)).select("hash_hi", "hash_lo")
-      // collect the affected-signature set DRIVER-SIDE (bounded probe,
-      // overlapped with the churn decode+hash): holding it on the
-      // driver lets the store read below prune FILES via col-stats
-      // instead of scanning the whole store per batch; beyond
-      // PruneSigLimit (a rebuild, not churn) fall back to the lazy
-      // full-scan semi-join — same rows, no pruning. Only worth its
-      // driver jobs when the store can actually prune (declared
-      // hash col-stats on base files).
-      val pruneFeasible = !storeWasEmpty &&
-        sigs.skippingWorthwhile("hash_hi")
-      val sigProbe: Future[Array[(Long, Long)]] =
-        if (!pruneFeasible) Future.successful(Array.empty)
-        else Future {
-          oldSigsOfTouched.unionByName(replaySigs)
-            .distinct().limit(PruneSigLimit + 1)
-            .collect().map(r => (r.getLong(0), r.getLong(1)))
-        }
-      // materialize before the write: small-file sizing reads Catalyst
-      // stats, exact only for a computed cache
-      val hashedN =
-        try newSigs.count()
-        finally Await.ready(sigProbe, Duration.Inf)
-      // surface a store-read failure here, not inside a later consumer
-      val storeSigVals = Await.result(sigProbe, Duration.Inf)
-      prof("hash+old-sig-probe")
-      // a churn doc whose NEW payload yields no signature (undecodable
-      // media; an all-silent clip under the envelope hash) must DROP
-      // OUT of the index — its old signature describes a superseded
-      // payload, and a from-scratch rebuild would have no row for it —
-      // so it joins the tombstone side instead of silently keeping
-      // stale pairs alive. Cached + counted: the drop-rate is the
-      // reconcile's RETURNED observability ([[ReconcileStats]]) — a
-      // codec regression silently dropping 30% of a corpus must be a
-      // monitored number, not an invisible one (the count reads only
-      // the churn's id column — pruned, O(churn))
-      val undecodable = cache(churnImgs.select("doc_id")
-        .join(newSigs.select("doc_id"), Seq("doc_id"), "left_anti"))
-      val droppedN = undecodable.count()
-      prof("undecodable")
-      val delC = cache(deletedIds.unionByName(undecodable).distinct())
-      // SKEW-COLLAPSED incremental reconcile — maintains exactly the
-      // [[pairsFromSigs]] contract (star edges inside byte-equal
-      // signature groups, one cross pair per group pair): a cluster
-      // of k identical signatures holds k-1 persisted pairs, not
-      // O(k²), and a churned cluster member re-derives O(k) pairs,
-      // not O(k²). AFFECTED groups are the signatures that gained,
-      // lost, or re-hashed a member this batch: the churn's NEW
-      // signatures plus the PRE-store signatures of churned/departed
-      // docs (a delete can promote a new representative, an insert
-      // with a smaller id can demote one — either rewrites the
-      // group's star edges and cross endpoints, which is why the
-      // tombstone scope below is group members, not just churn ids),
-      // plus the crash-replay widening collected above.
-      val spark0 = churnImgs.sparkSession
-      val newSigVals =
-        if (!pruneFeasible || storeSigVals.length > PruneSigLimit)
-          Array.empty[(Long, Long)]
-        else newSigs.select("hash_hi", "hash_lo").distinct()
-          .limit(PruneSigLimit + 1)
-          .collect().map(r => (r.getLong(0), r.getLong(1)))
-      val sigVals = (storeSigVals ++ newSigVals).distinct
-      val pruneOn = pruneFeasible && sigVals.length <= PruneSigLimit
-      val affectedSigs = cache(
-        if (pruneOn) {
-          import spark0.implicits._
-          sigVals.toSeq.toDF("hash_hi", "hash_lo")
-        } else newSigs.select("hash_hi", "hash_lo")
-          .unionByName(oldSigsOfTouched)
-          .unionByName(replaySigs)
-          .distinct())
-      // pre-write store slice the reconcile works from: FILE-PRUNED by
-      // the affected signatures when the set is bounded (after the
-      // store has been clustered by (hash_hi, hash_lo), a churn batch
-      // plans only files whose hash range intersects an affected group
-      // — O(affected files), the round-16 scaling fix; the hash_lo
-      // IN-list is loose across hash_hi runs, which only keeps extra
-      // files), the plain full snapshot otherwise. Exact under MOR
-      // pruning per snapshotSkipping's contract: every key whose
-      // current signature is affected is present and current; missing
-      // keys have unaffected signatures, dropped by the semi-join
-      // anyway. Plan pinned NOW, before the background write.
-      val (preSlice0, skipStats) =
-        if (storeWasEmpty)
-          (newSigs.limit(0).withColumn("rep", lit(null).cast("long")),
-            graft.core.SkipStats(0, 0, 0))
-        else if (pruneOn) {
-          val (df, st) = sigs.snapshotSkipping(Seq(
-            graft.core.ColPred("hash_hi", "eq",
-              sigVals.map(_._1.toString).distinct.toSeq, isLong = true),
-            graft.core.ColPred("hash_lo", "eq",
-              sigVals.map(_._2.toString).distinct.toSeq, isLong = true)))
-          (df.select("doc_id", "hash_hi", "hash_lo", "rep"), st)
-        } else
-          (preStore.select("doc_id", "hash_hi", "hash_lo", "rep"),
-            graft.core.SkipStats(0, 0, 0))
-      val preSlice = cache(pin(preSlice0))
-      // post-churn content of the affected slice, derived WITHOUT
-      // re-reading files: every churn doc has a row in newSigs, so the
-      // anti-join reproduces what the read-side merge would pick
-      val store =
-        if (storeWasEmpty) newSigs
-        else newSigs.unionByName(
-          preSlice.join(churnIds, Seq("doc_id"), "left_anti")
-            .select("doc_id", "hash_hi", "hash_lo"))
-      // members of AFFECTED groups only (affectedSigs is O(churn
-      // groups) — AQE broadcasts the semi-join, so the planned slice
-      // is scanned but never shuffled); the rep window then runs over
-      // this slice, not the whole store
-      import org.apache.spark.sql.expressions.Window
-      val byGroup = Window.partitionBy("hash_hi", "hash_lo")
-      val affectedMembers = cache(pin((
-        if (storeWasEmpty)
-          // bootstrap: every group is affected — skip the corpus-sized
-          // signature distinct + semi-join entirely (affectedSigs then
-          // never evaluates: its only other consumer anti-joins an
-          // empty pre-store side, which the optimizer eliminates)
-          store
-        else store.join(affectedSigs, Seq("hash_hi", "hash_lo"), "leftsemi"))
-        .withColumn("rep", min("doc_id").over(byGroup))))
-      // materialize the shared cache (and the store MOR read under
-      // it) ONCE on this thread before the background write launches:
-      // racing the write future and the pairs chain into a cold cache
-      // duplicates the store read — measured slower than the serial
-      // read + overlapped write
-      affectedMembers.count()
-      prof("affected-members")
-      val star = affectedMembers.filter(col("doc_id") =!= col("rep"))
-        .select(col("rep").as("a"), col("doc_id").as("b"),
-          lit(0).as("hamming"))
-      val affectedReps = affectedMembers
-        .filter(col("doc_id") === col("rep"))
-        .select("doc_id", "hash_hi", "hash_lo")
-      // the write set is the whole (cached) affected frame: every
-      // churn row plus every member of a group the churn touched,
-      // each carrying its CURRENT rep — a superset of the minimal
-      // rep-diff, chosen deliberately: a semi/anti/diff-join
-      // derivation of "only rows whose rep changed" costs 3 extra
-      // per-batch join jobs, which at streaming batch sizes outweighs
-      // re-upserting the (already small) affected slice. O(churn +
-      // affected-group size) per batch — the reconcile's documented
-      // cost envelope.
-      val writeRows = affectedMembers
-        .select("doc_id", "hash_hi", "hash_lo", "rep")
-      // BAND-POSTING INDEX (the [[NearDupIndex.reconcile]] postings
-      // contract, media form: entries DENORMALIZE the rep's hash
-      // halves so candidates verify hamming straight off the posting
-      // rows, no store join-back): derive this batch's posting delta
-      // and the pruned probe slice BEFORE any write launches, so
-      // every plan is pinned on pre-batch state.
-      val postingsPlan: Option[(org.apache.spark.sql.DataFrame,
-          org.apache.spark.sql.DataFrame,
-          Option[org.apache.spark.sql.DataFrame])] =
-        postings.map { p =>
-          val pSnap = p.snapshot()
-          val pBootstrap = !pSnap.columns.contains("blk")
-          require(storeWasEmpty || !pBootstrap,
-            "posting index attached to an already-populated signature " +
-              "store - drop/recreate the sigs, pairs AND postings " +
-              s"tables and rebuild with a bootstrap reconcile: ${p.basePath}")
-          val oldRepRows =
-            if (storeWasEmpty) preSlice.limit(0)
-            else preSlice
-              .join(affectedSigs, Seq("hash_hi", "hash_lo"), "leftsemi")
-              .filter(col("doc_id") === col("rep"))
-          val postDeletes = banded(oldRepRows).select("blk", "doc_id")
-          val postUpserts = banded(affectedReps)
-            .select("blk", "doc_id", "hash_hi", "hash_lo")
-          // adaptive probe ([[NearDupIndex.PostingProbeCutoff]]):
-          // file pruning only bites for micro-batch-sized key sets —
-          // None keeps the rep-scan probe while the index writes
-          // below still run
-          val rbStored: Option[org.apache.spark.sql.DataFrame] =
-            if (pBootstrap) None
-            else {
-              val blks = banded(affectedReps).select("blk").distinct()
-                .limit(NearDupIndex.PostingProbeCutoff + 1).collect()
-                .map(_.getLong(0))
-              // FILE-PRUNED slice when the key set is micro-batch-
-              // sized and the driver-side skipping plan shows real
-              // pruning; otherwise the FULL posting scan — still
-              // narrow columns, and it replaces re-deriving the same
-              // rows via the store scan + band-key flatMap (see
-              // NearDupIndex: measured ~2× cheaper)
-              val pruned: Option[org.apache.spark.sql.DataFrame] =
-                if (blks.length > NearDupIndex.PostingProbeCutoff) None
-                else {
-                  val (df, st) = p.snapshotSkipping(Seq(graft.core.ColPred(
-                    "blk", "eq", blks.map(_.toString).toSeq,
-                    isLong = true)))
-                  if (sys.env.get("GRAFT_PROFILE").contains("1"))
-                    Console.err.println(
-                      s"[graft-profile] phashReconcile:posting-probe " +
-                        s"keys=${blks.length} kept=${st.kept} " +
-                        s"skipped=${st.skipped} delta=${st.deltaRead}")
-                  if (st.kept > st.skipped && st.kept > 64) None
-                  // ROW-level filter on top of the file pruning: an
-                  // InSet at the scan keeps the candidate join
-                  // O(probe matches)
-                  else Some(df.where(col("blk").isin(blks.toSeq: _*)))
-                }
-              Some(pruned.getOrElse(pSnap)
-                .select("blk", "doc_id", "hash_hi", "hash_lo").join(
-                  oldRepRows.select("doc_id"), Seq("doc_id"),
-                  "left_anti"))
-            }
-          (postDeletes, postUpserts, rbStored)
-        }
-      // one sigs commit: churn signatures + rep updates + departed/
-      // undecodable-doc tombstones, run on a BACKGROUND thread so it
-      // overlaps the candidate/verify/pairs chain (the NearDupIndex
-      // pattern — the writes touch different tables, every relation
-      // derives post-churn content from pinned pre-write plans, the
-      // pairs snapshot is already pinned, and the shared
-      // affectedMembers cache is already materialized above — exact
-      // Catalyst stats for the writes' small-file sizing, no cold-
-      // cache race). combine=false — one row per doc (and per
-      // (blk, doc_id): band keys are index-prefixed, thus distinct
-      // within a rep) by construction. WRITE ORDER is load-bearing:
-      // postings commit BEFORE sigs (awaited inside the sigs future) —
-      // a replay after a sigs-committed/postings-uncommitted crash
-      // would derive posting delete keys from NEW hashes and could
-      // never retire a re-hashed rep's old-band entries; and the sigs
-      // write is awaited BEFORE the tagged pairs commit ("pairs tag
-      // present ⇒ whole batch committed" is the crash-safety
-      // invariant the streaming service relies on).
-      postWrite = postingsPlan match {
-        case Some((postDeletes, postUpserts, _)) => Future {
-          postings.get.upsertWithDeletes(
-            postUpserts.withColumn("ts", lit(ts)), postDeletes,
-            combine = false)
-        }
-        case None => Future.successful(())
-      }
-      sigWrite = Future {
-        Await.result(postWrite, Duration.Inf)
-        // '<tag>:sigs' marks the sig commit itself — the replay
-        // detector above reads it from timeline metadata
-        sigs.upsertWithDeletes(writeRows.withColumn("ts", lit(ts)), delC,
-          tag = sigsTag, combine = false)
-      }
-      // cross candidates: affected-group reps band-probed against ALL
-      // group reps = the recomputed affected reps plus the STORED reps
-      // of unaffected groups — from the PRE-MATERIALIZED, file-pruned
-      // posting slice when an index is attached (never the store-wide
-      // rep scan + 64-key explode), else the filter + broadcast
-      // anti-join off the pre-store scan (no window, no shuffle);
-      // pairs wholly inside the batch are found because affected reps
-      // are themselves reps
-      val rbFrame = postingsPlan match {
-        case Some((_, _, Some(rbStored))) => banded(affectedReps)
-          .select("doc_id", "hash_hi", "hash_lo", "blk")
-          .unionByName(rbStored
-            .select("doc_id", "hash_hi", "hash_lo", "blk"))
-        case _ =>
-          val storedReps =
-            if (storeWasEmpty) preSlice.limit(0)
-            else preStore.select("doc_id", "hash_hi", "hash_lo", "rep")
-          val allReps = affectedReps.unionByName(
-            storedReps.filter(col("doc_id") === col("rep"))
-              .join(affectedSigs, Seq("hash_hi", "hash_lo"), "left_anti")
-              .select("doc_id", "hash_hi", "hash_lo"))
-          banded(allReps)
-      }
-      val cross = banded(affectedReps).as("l")
-        .join(rbFrame.as("r"),
-          col("l.blk") === col("r.blk") &&
-            col("l.doc_id") =!= col("r.doc_id"))
-        .select(least(col("l.doc_id"), col("r.doc_id")).as("a"),
-          greatest(col("l.doc_id"), col("r.doc_id")).as("b"),
-          hammingCol.as("hamming"))
+      // [[NearDupIndex.reconcile]] postings contract; entries carry the
+      // rep's hash halves so candidates verify hamming straight off the
+      // posting rows. Attach from the store's bootstrap batch or
+      // drop/recreate all three.
+      postings: Option[graft.core.LakeTable] = None)
+      : NearDupIndex.ReconcileStats =
+    NearDupIndex.reconcileWith(hash64(hashFn), churnImgs, deletedIds,
+      sigs, pairs, ts, tag, postings)
+
+  /** A 64-bit media signature for the one reconcile: group key = the
+    * hash halves, the 64 two-level [[bandKeys]] as band keys (carrying
+    * the halves into the posting index), hamming ≤ 7 checked at the
+    * band join, star edges at hamming 0. */
+  private def hash64(hashFn: org.apache.spark.sql.DataFrame =>
+      org.apache.spark.sql.DataFrame) = NearDupIndex.Signature(
+    sign = hashFn,
+    keyCols = Seq("hash_hi", "hash_lo"),
+    bandSrc = Seq("hash_hi", "hash_lo"),
+    bandCol = "blk",
+    bands = banded,
+    starScore = lit(0).as("hamming"),
+    verify = (joined, star, f, _) => {
+      val newPairs = f.cache(f.pin(star.unionByName(joined
+        .select(NearDupIndex.pairCols :+ hammingCol.as("hamming"): _*)
         .filter(col("hamming") <= 7) // before distinct: see pairsFromSigs
-        .distinct()
-      val cand = cache(pin(star.unionByName(cross)))
-      cand.count()
-      prof("candidates")
-      // the store write must be durable before the tagged pairs commit
-      // (result, not ready: a store-write failure must surface before
-      // the tag is written)
-      Await.result(sigWrite, Duration.Inf)
-      prof("index-writes")
-      if (pairsBootstrap)
-        pairs.upsert(cand.withColumn("ts", lit(ts)), tag = tag,
-          combine = false)
-      else {
-        // tombstone side: stored pairs touching any CURRENT member of
-        // an affected group (their star/cross edges were re-derived
-        // above — an unchanged edge is an update) or any churned/
-        // departed id (their edges must die or re-home). A pair
-        // between two unaffected groups touches neither — reps can't
-        // have changed, so it is untouched. OR-of-keys as two hash
-        // semi-joins.
-        val staleIds = cache(affectedMembers.select("doc_id")
-          .unionByName(churnIds).distinct())
-        val cur = pairsSnap.select("a", "b")
-        val touched = cur
-          .join(staleIds.withColumnRenamed("doc_id", "a"), Seq("a"),
-            "leftsemi")
-          .unionByName(cur.join(
-            staleIds.withColumnRenamed("doc_id", "b"), Seq("b"),
-            "leftsemi"))
-          .distinct()
-        pairs.upsertWithDeletes(cand.withColumn("ts", lit(ts)), touched,
-          tag = tag, combine = false)
-      }
-      prof("pairs-commit")
-      ReconcileStats(hashedN, droppedN,
-        skipStats.kept, skipStats.skipped, skipStats.deltaRead)
-    } finally {
-      // on a pairs-chain failure the index writes may still be in
-      // flight — never unpersist their inputs from under them
-      Await.ready(postWrite, Duration.Inf)
-      Await.ready(sigWrite, Duration.Inf)
-      cached.foreach(_.unpersist())
-    }
-  }
+        .distinct())))
+      newPairs.count()
+      newPairs
+    },
+    keepUnsigned = false)
 
-  /** Per-reconcile decode observability: `hashed` churn payloads
-    * produced a signature this batch; `dropped` did not (undecodable
-    * media, or a signature-less payload like an all-silent clip) and
-    * were tombstoned out of the index. The drop-RATE is the number a
-    * 100 TB curation run monitors: "unique doc" and "codec regression
-    * silently dropped a third of the corpus" are indistinguishable
-    * from the pairs table alone. */
-  /** Affected-signature sets up to this size prune the store read
-    * FILE-wise through the col-stats index (collected driver-side);
-    * larger batches — a rebuild, not churn — fall back to the lazy
-    * full-scan semi-join (the [[NearDupIndex.PruneFpLimit]] analog). */
-  private[graft] val PruneSigLimit = 20000
-
-  final case class ReconcileStats(hashed: Long, dropped: Long,
-      storeFilesKept: Int = 0, storeFilesSkipped: Int = 0,
-      storeFilesDelta: Int = 0)
-
-  /** mm7 — INCREMENTAL perceptual image dedup: the maintained-index
-    * version of mm6, the shape a 100 TB multimodal corpus actually
-    * runs at ingest (pipe4's pattern with image signatures). Seed
-    * images carry their OWN injected pairs (% 13 == 5 copies — so the
-    * bootstrap stores real pairs and the churn reconcile exercises
-    * the non-bootstrap tombstone branch); a churn commit brings
-    * inserts (doc_id % 3 == 0), updates (the % 7 == 2 docs re-imaged
-    * as perturbed copies of their predecessor — brightness or
-    * single-pixel, cross-codec) and deletes — the delete slice
-    * includes partners of STORED bootstrap pairs (e.g. 278 of
-    * (277, 278): % 13 == 5 ∧ % 11 == 3), so a reconcile that fails to
-    * tombstone a departed doc's stored pairs hash-mismatches. ONLY
-    * the churn is read (incremental scan), decoded, hashed, and
-    * band-probed against the store. The oracle replays the FINAL
-    * corpus brute-force (image rule per churn membership: churned
-    * docs follow the (7, 2) masks, never-churned seed docs keep their
-    * (13, 5) image) — the maintained pairs table must equal a
-    * from-scratch batch rebuild. */
   /** The ONE incremental perceptual-dedup scenario (mm7/mm10 share
     * it; only the payload fixture and the 64-bit signature fn
     * differ): a seed commit carries (13, 5)-injected payloads — the
@@ -1182,6 +724,24 @@ object MultimodalOps {
     pairsT.snapshot().select("a", "b", "hamming").orderBy("a", "b")
   }
 
+  /** mm7 — INCREMENTAL perceptual image dedup: the maintained-index
+    * version of mm6, the shape a 100 TB multimodal corpus actually
+    * runs at ingest (pipe4's pattern with image signatures). Seed
+    * images carry their OWN injected pairs (% 13 == 5 copies — so the
+    * bootstrap stores real pairs and the churn reconcile exercises
+    * the non-bootstrap tombstone branch); a churn commit brings
+    * inserts (doc_id % 3 == 0), updates (the % 7 == 2 docs re-imaged
+    * as perturbed copies of their predecessor — brightness or
+    * single-pixel, cross-codec) and deletes — the delete slice
+    * includes partners of STORED bootstrap pairs (e.g. 278 of
+    * (277, 278): % 13 == 5 ∧ % 11 == 3), so a reconcile that fails to
+    * tombstone a departed doc's stored pairs hash-mismatches. ONLY
+    * the churn is read (incremental scan), decoded, hashed, and
+    * band-probed against the store. The oracle replays the FINAL
+    * corpus brute-force (image rule per churn membership: churned
+    * docs follow the (7, 2) masks, never-churned seed docs keep their
+    * (13, 5) image) — the maintained pairs table must equal a
+    * from-scratch batch rebuild. */
   private val phashIncQ = GQ(
     "mm7_phash_incremental",
     (s, dir) => incDedupScenario(s, dir, "mm7", imgFrame,
@@ -2031,8 +1591,8 @@ object MultimodalOps {
     * doc_id % 11 == 7 additionally → an all-silent clip, the
     * decodes-but-signature-less audio leg) and reports per-modality
     * (n_docs, hashable, dropped) — the number the reconciles also
-    * return per batch ([[ReconcileStats]]) and the streaming service
-    * journals per micro-batch. The oracle is pure mask arithmetic:
+    * return per batch ([[NearDupIndex.ReconcileStats]]) and the
+    * streaming service journals per micro-batch. The oracle is pure mask arithmetic:
     * a decoder that starts rejecting good payloads, or accepting bad
     * ones, hash-mismatches. */
   private val decodeCensusQ = GQ(

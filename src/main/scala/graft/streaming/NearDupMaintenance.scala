@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.core.LakeTable
@@ -63,77 +62,12 @@ object NearDupMaintenance {
       // (tiny fixtures; an external table-service cadence). The fold
       // is a replace commit — OCC-safe, and a crash mid-fold leaves
       // the table unchanged.
-      clusterEvery: Int = 0): StreamingQuery = {
-    require(LakeTable.exists(spark, sigPath),
-      s"create the signature store (doc_id as primaryKey) first: $sigPath")
-    require(LakeTable.exists(spark, pairsPath),
-      s"create the pairs table ((a, b) as primaryKey) first: $pairsPath")
-    postingsPath.foreach(p => require(LakeTable.exists(spark, p),
-      s"create the posting index ((bk, doc_id) as primaryKey) first: $p"))
-    // the CDC source fixes its schema when the stream starts; a table
-    // with no commits yet has no data columns, so the maintenance
-    // query would bind to a metadata-only feed and never see doc_id
-    require(LakeTable.load(spark, docsPath).schema.fieldNames.contains("doc_id"),
-      s"docs table needs a first commit (schema with doc_id) before " +
-        s"attaching maintenance: $docsPath")
-    val once = new ExactlyOnce(spark, checkpoint)
-    spark.readStream.format("graft")
-      .option("queryType", "cdc")
-      .option("startCommit", startCommit)
-      .load(docsPath)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sigs = LakeTable.load(spark, sigPath)
-        val pairs = LakeTable.load(spark, pairsPath)
-        val postings = postingsPath.map(LakeTable.load(spark, _))
-        once.runOnce(pairs, batchId) { tag =>
-          applyBatch(spark, docsPath, sigs, pairs, batch, checkpoint,
-            batchId, tag, postings)
-        }
-        // maintenance fold OUTSIDE the exactly-once block: clustering
-        // rewrites state, never content — replaying or skipping a
-        // fold is always sound
-        if (clusterEvery > 0 && batchId > 0 && batchId % clusterEvery == 0) {
-          sigs.withOcc()(sigs.cluster(Seq("fp")))
-          postings.foreach(p => p.withOcc()(p.cluster(Seq("bk"))))
-          pairs.withOcc()(pairs.cluster())
-        }
-        ()
-      }
-      .start()
-  }
-
-  private def applyBatch(
-      spark: SparkSession,
-      docsPath: String,
-      sigs: LakeTable,
-      pairs: LakeTable,
-      batch: DataFrame,
-      checkpoint: String,
-      batchId: Long,
-      tag: Option[String],
-      postings: Option[LakeTable] = None): Unit = {
-    // persist the CDC micro-batch once: the churn/deleted splits and
-    // the reconciliation's own consumers would otherwise re-run the
-    // CDC net-diff per job on this continuously-hot path
-    val batchC = batch.persist()
-    try {
-      if (batchC.isEmpty) return // empty micro-batch: no state to change
-      val (upserted, deletedIds) = LakeTable.cdcUpsertsAndDeletes(
-        batchC, "doc_id", Seq("text"))
+      clusterEvery: Int = 0): StreamingQuery =
+    startIndexService(spark, docsPath, "text", sigPath, pairsPath,
+        postingsPath, checkpoint, startCommit, clusterEvery, Seq("fp"),
+        "bk") { b =>
       val docsSnap = LakeTable.load(spark, docsPath).snapshot()
         .select("doc_id", "text")
-      // preCombine stamp = this batch's END-OFFSET docs commit instant
-      // (pinned in the checkpoint offset log): ONE version domain with
-      // the `CALL graft.system.maintain_neardups` procedure, which
-      // stamps docs commit instants — a CALL-bootstrapped store hands
-      // over to streaming cleanly (batch-id stamps, being tiny, would
-      // LOSE every read-side merge against bootstrap-era rows and the
-      // stream's updates would be silently ignored). Monotonic across
-      // checkpoint resets too, unlike batch ids. Same convention as
-      // [[SearchIndexMaintenance]].
-      val ts = OffsetLog.endOffsetInstant(spark, checkpoint, batchId).toLong
       // candidate verification reads the docs table KEY-PRUNED
       // (snapshotForKeys bounds; candidates are O(churn) per batch)
       // instead of semi-joining the full snapshot scan
@@ -142,8 +76,93 @@ object NearDupMaintenance {
           .snapshotForKeys(ids.map(_.toString).toSet)
           .select("doc_id", "text")
       graft.queries.NearDupIndex.reconcile(
-        upserted, deletedIds, docsSnap, sigs, pairs, ts, tag,
-        postings = postings, docsLookup = Some(lookup))
-    } finally batchC.unpersist()
+        b.upserted, b.deleted, docsSnap, b.sigs, b.pairs, b.ts, b.tag,
+        postings = b.postings, docsLookup = Some(lookup))
+      ()
+    }
+
+  /** One non-empty micro-batch of a signature-index service: the CDC
+    * split of the source table, the state tables, the preCombine stamp
+    * and the [[ExactlyOnce]] tag. */
+  private[streaming] final case class IndexBatch(
+      batchId: Long, ts: Long, upserted: DataFrame, deleted: DataFrame,
+      sigs: LakeTable, pairs: LakeTable, postings: Option[LakeTable],
+      tag: Option[String])
+
+  /** The ONE service skeleton of the maintained signature indexes (this
+    * service and [[SignatureMaintenance]]): existence checks, the CDC
+    * feed of `srcPath`, the exactly-once batch guard, the CDC split on
+    * `valueCol`, the offset-log preCombine stamp, and the `clusterEvery`
+    * fold by `groupKey` (sig store) and `bandCol` (posting index).
+    * `reconcile` runs inside the exactly-once block. */
+  private[streaming] def startIndexService(
+      spark: SparkSession, srcPath: String, valueCol: String,
+      sigPath: String, pairsPath: String, postingsPath: Option[String],
+      checkpoint: String, startCommit: String, clusterEvery: Int,
+      groupKey: Seq[String], bandCol: String)(reconcile: IndexBatch => Unit): StreamingQuery = {
+    require(LakeTable.exists(spark, sigPath),
+      s"create the signature store (doc_id as primaryKey) first: $sigPath")
+    require(LakeTable.exists(spark, pairsPath),
+      s"create the pairs table ((a, b) as primaryKey) first: $pairsPath")
+    postingsPath.foreach(p => require(LakeTable.exists(spark, p),
+      s"create the posting index (($bandCol, doc_id) as primaryKey) first: $p"))
+    // the CDC source fixes its schema when the stream starts; a table
+    // with no commits yet has no data columns, so the maintenance
+    // query would bind to a metadata-only feed and never see doc_id.
+    // valueCol checked here too: a misnamed column must fail fast with
+    // the service's own message, not as an opaque streaming analysis
+    // error after start
+    val fields = LakeTable.load(spark, srcPath).schema.fieldNames.toSet
+    require(Seq("doc_id", valueCol).forall(fields.contains),
+      s"source table needs a first commit (schema with doc_id and " +
+        s"'$valueCol') before attaching maintenance: $srcPath")
+    val once = new ExactlyOnce(spark, checkpoint)
+    spark.readStream.format("graft")
+      .option("queryType", "cdc")
+      .option("startCommit", startCommit)
+      .load(srcPath)
+      .writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val sigs = LakeTable.load(spark, sigPath)
+        val pairs = LakeTable.load(spark, pairsPath)
+        val postings = postingsPath.map(LakeTable.load(spark, _))
+        once.runOnce(pairs, batchId) { tag =>
+          // persist the CDC micro-batch once: the churn/deleted splits
+          // and the reconcile's own consumers would otherwise re-run
+          // the CDC net-diff per job on this continuously-hot path
+          val batchC = batch.persist()
+          try {
+            // empty micro-batch: no state to change
+            if (!batchC.isEmpty) {
+              val (upserted, deleted) = LakeTable.cdcUpsertsAndDeletes(
+                batchC, "doc_id", Seq(valueCol))
+              // preCombine stamp = this batch's END-OFFSET source commit
+              // instant (pinned in the checkpoint offset log): ONE
+              // version domain with the `CALL graft.system.maintain_*`
+              // procedures, which stamp source commit instants — a
+              // CALL-bootstrapped store hands over to streaming cleanly
+              // (batch-id stamps, being tiny, would LOSE every read-side
+              // merge against bootstrap-era rows). Monotonic across
+              // checkpoint resets too, unlike batch ids. Same convention
+              // as [[SearchIndexMaintenance]].
+              val ts = OffsetLog.endOffsetInstant(spark, checkpoint, batchId)
+                .toLong
+              reconcile(IndexBatch(batchId, ts, upserted, deleted, sigs,
+                pairs, postings, tag))
+            }
+          } finally batchC.unpersist()
+        }
+        // maintenance fold OUTSIDE the exactly-once block: clustering
+        // rewrites state, never content — replaying or skipping a
+        // fold is always sound
+        if (clusterEvery > 0 && batchId > 0 && batchId % clusterEvery == 0) {
+          sigs.withOcc()(sigs.cluster(groupKey))
+          postings.foreach(p => p.withOcc()(p.cluster(Seq(bandCol))))
+          pairs.withOcc()(pairs.cluster())
+        }
+        ()
+      }
+      .start()
   }
 }

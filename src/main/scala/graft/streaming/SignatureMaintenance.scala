@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.core.LakeTable
@@ -185,71 +184,22 @@ object SignatureMaintenance {
       // folds. 0 = off (tiny fixtures; an external table-service
       // cadence). The fold is a replace commit — OCC-safe, and a
       // crash mid-fold leaves the table unchanged.
-      clusterEvery: Int = 0): StreamingQuery = {
-    require(LakeTable.exists(spark, sigPath),
-      s"create the signature store (doc_id as primaryKey) first: $sigPath")
-    require(LakeTable.exists(spark, pairsPath),
-      s"create the pairs table ((a, b) as primaryKey) first: $pairsPath")
-    postingsPath.foreach(p => require(LakeTable.exists(spark, p),
-      s"create the posting index ((blk, doc_id) as primaryKey) first: $p"))
-    // the CDC source fixes its schema at stream start; a payload table
-    // with no commits would bind a metadata-only feed (the
-    // NearDupMaintenance precondition). payloadCol checked here too:
-    // a misnamed payload column must fail fast with the service's own
-    // message, not as an opaque streaming analysis error after start
-    val payloadFields = LakeTable.load(spark, payloadsPath)
-      .schema.fieldNames.toSet
-    require(Seq("doc_id", payloadCol).forall(payloadFields.contains),
-      s"payloads table needs a first commit (schema with doc_id and " +
-        s"'$payloadCol') before attaching maintenance: $payloadsPath")
-    val once = new ExactlyOnce(spark, checkpoint)
-    spark.readStream.format("graft")
-      .option("queryType", "cdc")
-      .option("startCommit", startCommit)
-      .load(payloadsPath)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sigs = LakeTable.load(spark, sigPath)
-        val pairs = LakeTable.load(spark, pairsPath)
-        val postings = postingsPath.map(LakeTable.load(spark, _))
-        once.runOnce(pairs, batchId) { tag =>
-          // persist the CDC micro-batch once: the churn/deleted splits
-          // and the reconcile's candidate probe all consume it
-          val batchC = batch.persist()
-          try {
-            if (!batchC.isEmpty) {
-              val (ups, deletedIds) = LakeTable.cdcUpsertsAndDeletes(
-                batchC, "doc_id", Seq(payloadCol))
-              val upserted = ups.withColumnRenamed(payloadCol, "payload")
-              val ts = OffsetLog
-                .endOffsetInstant(spark, checkpoint, batchId).toLong
-              val stats = graft.queries.MultimodalOps.phashReconcile(
-                upserted, deletedIds, sigs, pairs, ts, tag = tag,
-                hashFn = hashFn, postings = postings)
-              // per-batch decode census, appended to a checkpoint
-              // sidecar: the service's drop-rate is a monitored
-              // number, not an invisible one. Written AFTER the
-              // tagged pairs commit — a crash loses at most the last
-              // line, never records a batch that didn't land; a
-              // replayed batch (marker lost) appends a duplicate
-              // line, which an aggregation by batch id collapses.
-              val line = s"""{"batch":$batchId,"instant":$ts,""" +
-                s""""hashed":${stats.hashed},"dropped":${stats.dropped}}"""
-              appendStatsLine(spark, checkpoint, line)
-            }
-          } finally batchC.unpersist()
-        }
-        // maintenance fold OUTSIDE the exactly-once block: clustering
-        // rewrites state, never content — replaying or skipping a
-        // fold is always sound
-        if (clusterEvery > 0 && batchId > 0 && batchId % clusterEvery == 0) {
-          sigs.withOcc()(sigs.cluster(Seq("hash_hi", "hash_lo")))
-          postings.foreach(p => p.withOcc()(p.cluster(Seq("blk"))))
-          pairs.withOcc()(pairs.cluster())
-        }
-        ()
-      }
-      .start()
-  }
+      clusterEvery: Int = 0): StreamingQuery =
+    NearDupMaintenance.startIndexService(spark, payloadsPath, payloadCol,
+        sigPath, pairsPath, postingsPath, checkpoint, startCommit,
+        clusterEvery, Seq("hash_hi", "hash_lo"), "blk") { b =>
+      val stats = graft.queries.MultimodalOps.phashReconcile(
+        b.upserted.withColumnRenamed(payloadCol, "payload"), b.deleted,
+        b.sigs, b.pairs, b.ts, tag = b.tag, hashFn = hashFn,
+        postings = b.postings)
+      // per-batch decode census, appended to a checkpoint sidecar: the
+      // service's drop-rate is a monitored number, not an invisible
+      // one. Written AFTER the tagged pairs commit — a crash loses at
+      // most the last line, never records a batch that didn't land; a
+      // replayed batch (marker lost) appends a duplicate line, which an
+      // aggregation by batch id collapses.
+      appendStatsLine(spark, checkpoint,
+        s"""{"batch":${b.batchId},"instant":${b.ts},""" +
+          s""""hashed":${stats.hashed},"dropped":${stats.dropped}}""")
+    }
 }

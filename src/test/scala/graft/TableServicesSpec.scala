@@ -497,8 +497,8 @@ class TableServicesSpec extends AnyFunSuite {
     // O_EXCL marker claim replacing Hadoop's non-atomic local
     // exists-then-create) exists precisely for writers in DIFFERENT
     // processes, which no in-process test can exercise. A real second
-    // JVM (graft.tools.OccJvmWriter, launched the way ab_bench.sh
-    // launches Bench) commits into partition dB while this JVM
+    // JVM (graft.tools.OccJvmWriter, a plain `java -cp` child on this
+    // JVM's classpath) commits into partition dB while this JVM
     // commits into dA; both count whole-write OCC retries. Disjoint
     // partitions share no file groups, so EVERY retry would be a
     // phantom (an instant-name collision) — both writers must report
