@@ -6,14 +6,18 @@
 Each commit is checked out once (a local clone sharing this repository's
 objects, so the repository's own .git is left alone) under --root, and each
 checkout builds and runs its OWN perfbench/run.py for BENCHMARK.json's
-run_seconds. Pair i runs both sides on seed i+1, the parent first in even
-pairs and the change first in odd ones.
+run_seconds. Pair i runs both sides on seed i+1 (or every pair on --seed N,
+for a held-out seed), the parent first in even pairs and the change first
+in odd ones.
 Metric names, directions and bounds come from BENCHMARK.json. For each
 metric the report prints both medians, both IQR/median spreads, the
 change's wins out of the pairs (ties count for neither), and for
 end-to-end metrics whether the change's median is worse than the parent's
 by more than the bound. --trace 1 runs traced and reports the per-layer
-metrics instead. Every run is appended to --log as one JSON line.
+metrics instead. --claim METRIC adds the verdict of the claim rule for that
+metric: the change must win at least 9 in 10 of the pairs, and its median
+must beat the parent's by more than the parent's interquartile range.
+Every run is appended to --log as one JSON line.
 Exits non-zero when any run failed.
 """
 import argparse
@@ -75,6 +79,10 @@ def main():
     ap.add_argument("change")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, default=10)
+    ap.add_argument("--seed", type=int, default=None,
+                    help="run every pair on this seed instead of seeds 1..N")
+    ap.add_argument("--claim", default=None, metavar="METRIC",
+                    help="print the claim-rule verdict for this metric")
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--root", default="/tmp/graft-ab")
     ap.add_argument("--log", default=None,
@@ -91,7 +99,7 @@ def main():
     ops = {"parent": [0, 0], "change": [0, 0]}  # failed, attempted
     bad = 0
     for i in range(a.pairs):
-        seed = i + 1
+        seed = a.seed if a.seed is not None else i + 1
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         for side in order:
             sha, d = sides[side]
@@ -115,6 +123,8 @@ def main():
     print(f"{a.workload}: {a.pairs} pairs, {seconds} s runs, "
           f"parent {sides['parent'][0][:12]} vs change {sides['change'][0][:12]}")
     report(metrics, runs, ops)
+    if a.claim:
+        print(claim(bench["end_to_end"] + bench["per_layer"], a.claim, runs))
     if bad:
         print(f"{bad} run(s) failed or were incorrect", file=sys.stderr)
         sys.exit(1)
@@ -126,6 +136,32 @@ def values(res):
         return {}
     return {k: v["value"] if isinstance(v, dict) else v
             for k, v in res["metrics"].items()}
+
+
+def claim(metrics, name, runs):
+    """The claim rule's verdict for one metric: wins in at least 9/10 of
+    the pairs (ties count for neither side), and a median gap larger than
+    the parent's interquartile range."""
+    m = next((m for m in metrics if m["name"] == name), None)
+    if m is None:
+        return f"claim {name}: no such metric in BENCHMARK.json"
+    lower = m["better"] == "lower"
+    pairs = [(p[name], c[name]) for p, c in zip(runs["parent"], runs["change"])
+             if name in p and name in c]
+    if not pairs:
+        return f"claim {name}: no complete pairs"
+    ps, cs = [p for p, _ in pairs], [c for _, c in pairs]
+    wins = sum((c < p) if lower else (c > p) for p, c in pairs)
+    q1, pm, q3 = quartiles(ps)
+    cm = statistics.median(cs)
+    gap = (pm - cm) if lower else (cm - pm)
+    won = wins * 10 >= 9 * len(pairs)
+    clear = gap > q3 - q1
+    return (f"claim {name}: wins {wins}/{len(pairs)} "
+            f"({'meets' if won else 'misses'} 9/10); median {pm:.4g} -> {cm:.4g} "
+            f"({cm / pm:.2f}x), gap {gap:.4g} vs parent IQR {q3 - q1:.4g} "
+            f"({'exceeds' if clear else 'does not exceed'}); "
+            f"{'HOLDS' if won and clear else 'FAILS'}")
 
 
 def report(metrics, runs, ops):

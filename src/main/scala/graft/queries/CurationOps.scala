@@ -1392,8 +1392,9 @@ object CurationOps {
     (s, dir) => {
       import graft.core.{LakeTable, TableProps}
       import QueryPack.scratchDir
-      import scala.concurrent.{Await, ExecutionContext, Future}
+      import scala.concurrent.Await
       import scala.concurrent.duration._
+      import org.apache.spark.sql.graftshim.SubmitterFuture
 
       val (seed, churn, delKeys) = bm25Scenario(s, dir)
       val docsDir = scratchDir(s, dir, "st6docs")
@@ -1423,8 +1424,7 @@ object CurationOps {
           churn.join(delKeys, Seq("doc_id"), "left_anti"), delKeys)
         // … and compaction races the churn fold from separate writer
         // handles (one per table — a writer is single-threaded)
-        implicit val ec: ExecutionContext = ExecutionContext.global
-        val fc = Future {
+        val fc = SubmitterFuture {
           Seq(postDir, statsDir, totDir).foreach { p =>
             val w = LakeTable.load(s, p)
             w.withOcc()(w.compact())

@@ -594,11 +594,11 @@ object LakeQueries {
         base(s, dir).filter(col("c_custkey") % 2 === mod)
           .withColumn("ts", lit(2L))
           .withColumn("c_name", concat(col("c_name"), lit(sfx)))
-      import scala.concurrent.{Await, ExecutionContext, Future}
+      import scala.concurrent.Await
       import scala.concurrent.duration._
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      val f1 = Future(w1.withOcc()(w1.upsert(batch(0, "_w1"))))
-      val f2 = Future(w2.withOcc()(w2.upsert(batch(1, "_w2"))))
+      import org.apache.spark.sql.graftshim.SubmitterFuture
+      val f1 = SubmitterFuture(w1.withOcc()(w1.upsert(batch(0, "_w1"))))
+      val f2 = SubmitterFuture(w2.withOcc()(w2.upsert(batch(1, "_w2"))))
       // ready BOTH before extracting either result: rethrowing f1's
       // failure with f2 still committing would abandon a lake write
       // unsupervised (the hazard QueryPack.overlapping documents)
@@ -1105,14 +1105,14 @@ object LakeQueries {
         .withColumn("c_name", concat(col("c_name"), lit("_a"))))
       val writer = LakeTable.load(s, p)
       val service = LakeTable.load(s, p)
-      import scala.concurrent.{Await, ExecutionContext, Future}
+      import scala.concurrent.Await
       import scala.concurrent.duration._
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      val fw = Future(writer.withOcc()(writer.upsert(
+      import org.apache.spark.sql.graftshim.SubmitterFuture
+      val fw = SubmitterFuture(writer.withOcc()(writer.upsert(
         base(s, dir).filter(col("c_custkey") % 2 === 0)
           .withColumn("ts", lit(3L))
           .withColumn("c_name", concat(col("c_name"), lit("_w"))))))
-      val fs = Future(service.withOcc()(service.cluster(Seq("c_custkey"))))
+      val fs = SubmitterFuture(service.withOcc()(service.cluster(Seq("c_custkey"))))
       // ready both before extracting either (see lake19)
       Await.ready(fw, 10.minutes); Await.ready(fs, 10.minutes)
       Await.result(fw, 1.second)

@@ -1326,19 +1326,20 @@ object MultimodalOps {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
+    import org.apache.spark.sql.graftshim.SubmitterFuture
     def reconcileAll(
         payload: org.apache.spark.sql.DataFrame,
         docsSnap: org.apache.spark.sql.DataFrame,
         dels: org.apache.spark.sql.DataFrame, ts: Long): Unit = {
       val media = mods.map { case (m, hf) =>
-        Future {
+        SubmitterFuture {
           val (sigs, prs) = stores(m)
           phashReconcile(payload.select(col("doc_id"), col(m).as("payload")),
             dels, sigs, prs, ts, hf)
           ()
         }
       }
-      val text = Future {
+      val text = SubmitterFuture {
         graft.queries.NearDupIndex.reconcile(
           payload.select(col("doc_id"), col("txt").as("text")),
           dels,

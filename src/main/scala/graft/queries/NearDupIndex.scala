@@ -1,13 +1,13 @@
 package graft.queries
 
 import scala.concurrent.{Await, Future}
-import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.SubmitterFuture
 import org.apache.spark.sql.types.{DataType, LongType}
 
 import graft.core.{ColPred, LakeTable, SkipStats}
@@ -330,7 +330,7 @@ private[graft] object NearDupIndex {
         df.filter(keyed).distinct().limit(PruneLimit + 1).collect()
       val storeProbe: Future[Array[Row]] =
         if (!pruneFeasible) Future.successful(Array.empty)
-        else Future(probe(oldKeys.unionByName(replayKeys)))
+        else SubmitterFuture(probe(oldKeys.unionByName(replayKeys)))
       // materialize BEFORE the background writes start: their
       // small-file sizing reads Catalyst stats, exact only for a
       // computed cache, and the writes and the candidate join would
@@ -503,14 +503,14 @@ private[graft] object NearDupIndex {
       // (band key, doc_id), band keys being index-prefixed — by
       // construction.
       postWrite = postingsPlan match {
-        case Some((postDeletes, postUpserts, _)) => Future {
+        case Some((postDeletes, postUpserts, _)) => SubmitterFuture {
           postings.get.upsertWithDeletes(
             postUpserts.withColumn("ts", lit(ts)), postDeletes,
             combine = false)
         }
         case None => Future.successful(())
       }
-      sigWrite = Future {
+      sigWrite = SubmitterFuture {
         Await.result(postWrite, Duration.Inf)
         sigs.upsertWithDeletes(writeRows.withColumn("ts", lit(ts)),
           delC, tag = sigsTag, combine = false)
@@ -535,7 +535,7 @@ private[graft] object NearDupIndex {
                 staleIds.withColumnRenamed("doc_id", "b"),
                 Seq("b"), "leftsemi"))
               .distinct())
-          touchedJob = Future { touched.count() }
+          touchedJob = SubmitterFuture(touched.count())
           Some(touched)
         }
       val star = affectedMembers.filter(col("doc_id") =!= col("rep"))

@@ -68,15 +68,14 @@ object QueryPack {
   private[queries] def overlapping[A, B](
       bgWrites: Seq[String], fgWrites: Seq[String])(
       bg: => A)(fg: => B): (A, B) = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.Await
     import scala.concurrent.duration.Duration
     def canon(p: String) = new java.io.File(p).getCanonicalPath
     val clash = bgWrites.map(canon).toSet intersect fgWrites.map(canon).toSet
     require(clash.isEmpty,
       s"overlapping: both chains declare writes to ${clash.mkString(", ")} " +
         "— the concurrent-chain helper is sound only for disjoint tables")
-    val f = Future(bg)
+    val f = org.apache.spark.sql.graftshim.SubmitterFuture(bg)
     val r = try fg catch {
       // bounded: the await exists so a failing foreground never leaves
       // lake commits running unsupervised, but a HUNG background job

@@ -1,13 +1,13 @@
 package graft.queries
 
 import scala.concurrent.{Await, Future}
-import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration.Duration
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.SubmitterFuture
 
-import graft.core.LakeTable
+import graft.core.{KeyGen, LakeTable}
 
 /** The ONE fold algorithm behind the maintained BM25 search index —
   * shared by the `pipe6_incremental_bm25` gate (bootstrap and
@@ -121,8 +121,9 @@ private[graft] object SearchIndex {
     val cached = scala.collection.mutable.ListBuffer.empty[DataFrame]
     def cache(df: DataFrame) = { cached += df.persist(); df }
     // plans over the CURRENT state, pinned before the concurrent
-    // writes below (snapshot() resolves its file list eagerly)
-    val statsSnap = stats.snapshot()
+    // writes below (snapshot() resolves its file list eagerly); the
+    // stats fold reads its table inside its own future, which is that
+    // table's only writer
     val totalsSnap = totals.snapshot()
     var writes: Seq[Future[Any]] = Seq.empty
     try {
@@ -169,23 +170,35 @@ private[graft] object SearchIndex {
       // (groupBy on the key), so the write-side pre-combine window is
       // skipped (combine=false, Hudi's combine.before.upsert=false)
       writes = Seq(
-        Future {
+        SubmitterFuture {
           guard(post, { tag =>
             post.upsertWithDeletes(newPost.withColumn("ts", lit(ts)),
               oldPost.select("doc_id", "term"), tag = tag, combine = false)
             ()
           })
         },
-        Future {
+        SubmitterFuture {
           guard(stats, { tag =>
-            val stored = if (statsSnap.columns.contains("term"))
-              statsSnap.select(col("term"), col("df"))
-            else dfDelta.select(col("term"), col("ddf").as("df")).limit(0)
             // O(churn terms), NOT O(vocabulary): only terms whose
-            // presence count changed get a new version — the delta
-            // side drives the join; unchanged dictionary rows are
-            // never rewritten (preCombine keeps their stored version
-            // at read time)
+            // presence count changed are read and get a new version —
+            // the delta side drives the join; unchanged dictionary rows
+            // are never rewritten (preCombine keeps their stored
+            // version at read time). Up to [[NearDupIndex.PruneLimit]]
+            // delta terms the stored side is a KEY-PRUNED read (files
+            // whose key bounds hold a delta term), re-filtered to those
+            // terms as snapshotForKeys' contract requires; a larger
+            // delta (a bootstrap or a rebuild) reads the whole snapshot
+            val stored = if (!stats.schema.fieldNames.contains("term"))
+              dfDelta.select(col("term"), col("ddf").as("df")).limit(0)
+            else {
+              val terms = dfDelta.select("term")
+                .limit(NearDupIndex.PruneLimit + 1).collect().map(_.getString(0))
+              if (terms.length > NearDupIndex.PruneLimit)
+                stats.snapshot().select(col("term"), col("df"))
+              else stats.snapshotForKeys(terms.flatMap(KeyGen.keyForLiteral).toSet)
+                .filter(col("term").isin(terms.toSeq: _*))
+                .select(col("term"), col("df"))
+            }
             // persist + materialize so the upsert's small-file sizing
             // sees real stats (the join's Catalyst estimate is the
             // product of its inputs), then drop the cache — this
@@ -201,7 +214,7 @@ private[graft] object SearchIndex {
             ()
           })
         },
-        Future {
+        SubmitterFuture {
           guard(totals, { tag =>
             // BOTH sides of the one-row fold resolve driver-side: the
             // stored side is one row at most (and a crossJoin against

@@ -66,13 +66,13 @@ object NearDupMaintenance {
     startIndexService(spark, docsPath, "text", sigPath, pairsPath,
         postingsPath, checkpoint, startCommit, clusterEvery, Seq("fp"),
         "bk") { b =>
-      val docsSnap = LakeTable.load(spark, docsPath).snapshot()
+      val docsSnap = LakeTable.load(b.spark, docsPath).snapshot()
         .select("doc_id", "text")
       // candidate verification reads the docs table KEY-PRUNED
       // (snapshotForKeys bounds; candidates are O(churn) per batch)
       // instead of semi-joining the full snapshot scan
       val lookup = (ids: Seq[Long]) =>
-        LakeTable.load(spark, docsPath)
+        LakeTable.load(b.spark, docsPath)
           .snapshotForKeys(ids.map(_.toString).toSet)
           .select("doc_id", "text")
       graft.queries.NearDupIndex.reconcile(
@@ -81,20 +81,22 @@ object NearDupMaintenance {
       ()
     }
 
-  /** One non-empty micro-batch of a signature-index service: the CDC
-    * split of the source table, the state tables, the preCombine stamp
-    * and the [[ExactlyOnce]] tag. */
+  /** One non-empty micro-batch of a signature-index service: the
+    * interpreted session it runs in ([[MicroBatch]]), the CDC split of
+    * the source table, the state tables loaded in that session, the
+    * preCombine stamp and the [[ExactlyOnce]] tag. */
   private[streaming] final case class IndexBatch(
-      batchId: Long, ts: Long, upserted: DataFrame, deleted: DataFrame,
-      sigs: LakeTable, pairs: LakeTable, postings: Option[LakeTable],
-      tag: Option[String])
+      spark: SparkSession, batchId: Long, ts: Long, upserted: DataFrame,
+      deleted: DataFrame, sigs: LakeTable, pairs: LakeTable,
+      postings: Option[LakeTable], tag: Option[String])
 
   /** The ONE service skeleton of the maintained signature indexes (this
     * service and [[SignatureMaintenance]]): existence checks, the CDC
     * feed of `srcPath`, the exactly-once batch guard, the CDC split on
     * `valueCol`, the offset-log preCombine stamp, and the `clusterEvery`
     * fold by `groupKey` (sig store) and `bandCol` (posting index).
-    * `reconcile` runs inside the exactly-once block. */
+    * `reconcile` runs inside the exactly-once block, in the service's
+    * interpreted session ([[MicroBatch]]). */
   private[streaming] def startIndexService(
       spark: SparkSession, srcPath: String, valueCol: String,
       sigPath: String, pairsPath: String, postingsPath: Option[String],
@@ -117,6 +119,7 @@ object NearDupMaintenance {
       s"source table needs a first commit (schema with doc_id and " +
         s"'$valueCol') before attaching maintenance: $srcPath")
     val once = new ExactlyOnce(spark, checkpoint)
+    val micro = new MicroBatch(spark)
     spark.readStream.format("graft")
       .option("queryType", "cdc")
       .option("startCommit", startCommit)
@@ -124,42 +127,44 @@ object NearDupMaintenance {
       .writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sigs = LakeTable.load(spark, sigPath)
-        val pairs = LakeTable.load(spark, pairsPath)
-        val postings = postingsPath.map(LakeTable.load(spark, _))
+        def load(s: SparkSession, p: String) = LakeTable.load(s, p)
+        val pairs = load(micro.interpreted, pairsPath)
         once.runOnce(pairs, batchId) { tag =>
-          // persist the CDC micro-batch once: the churn/deleted splits
-          // and the reconcile's own consumers would otherwise re-run
-          // the CDC net-diff per job on this continuously-hot path
-          val batchC = batch.persist()
-          try {
-            // empty micro-batch: no state to change
-            if (!batchC.isEmpty) {
-              val (upserted, deleted) = LakeTable.cdcUpsertsAndDeletes(
-                batchC, "doc_id", Seq(valueCol))
-              // preCombine stamp = this batch's END-OFFSET source commit
-              // instant (pinned in the checkpoint offset log): ONE
-              // version domain with the `CALL graft.system.maintain_*`
-              // procedures, which stamp source commit instants — a
-              // CALL-bootstrapped store hands over to streaming cleanly
-              // (batch-id stamps, being tiny, would LOSE every read-side
-              // merge against bootstrap-era rows). Monotonic across
-              // checkpoint resets too, unlike batch ids. Same convention
-              // as [[SearchIndexMaintenance]].
-              val ts = OffsetLog.endOffsetInstant(spark, checkpoint, batchId)
-                .toLong
-              reconcile(IndexBatch(batchId, ts, upserted, deleted, sigs,
-                pairs, postings, tag))
-            }
-          } finally batchC.unpersist()
+          // the CDC micro-batch is persisted once, interpreted
+          // ([[MicroBatch]]): the churn/deleted splits and the
+          // reconcile's own consumers would otherwise re-run the CDC
+          // net-diff per job on this continuously-hot path
+          micro.fold(batch) { rows =>
+            val (upserted, deleted) = LakeTable.cdcUpsertsAndDeletes(
+              rows, "doc_id", Seq(valueCol))
+            // preCombine stamp = this batch's END-OFFSET source commit
+            // instant (pinned in the checkpoint offset log): ONE
+            // version domain with the `CALL graft.system.maintain_*`
+            // procedures, which stamp source commit instants — a
+            // CALL-bootstrapped store hands over to streaming cleanly
+            // (batch-id stamps, being tiny, would LOSE every read-side
+            // merge against bootstrap-era rows). Monotonic across
+            // checkpoint resets too, unlike batch ids. Same convention
+            // as [[SearchIndexMaintenance]].
+            val ts = OffsetLog.endOffsetInstant(spark, checkpoint, batchId)
+              .toLong
+            reconcile(IndexBatch(micro.interpreted, batchId, ts, upserted,
+              deleted, load(micro.interpreted, sigPath), pairs,
+              postingsPath.map(load(micro.interpreted, _)), tag))
+          }
+          ()
         }
         // maintenance fold OUTSIDE the exactly-once block: clustering
         // rewrites state, never content — replaying or skipping a
-        // fold is always sound
+        // fold is always sound. A whole-table rewrite, so it runs in
+        // the caller's session, with codegen
         if (clusterEvery > 0 && batchId > 0 && batchId % clusterEvery == 0) {
+          val sigs = load(spark, sigPath)
           sigs.withOcc()(sigs.cluster(groupKey))
-          postings.foreach(p => p.withOcc()(p.cluster(Seq(bandCol))))
-          pairs.withOcc()(pairs.cluster())
+          postingsPath.map(load(spark, _))
+            .foreach(p => p.withOcc()(p.cluster(Seq(bandCol))))
+          val pairsC = load(spark, pairsPath)
+          pairsC.withOcc()(pairsC.cluster())
         }
         ()
       }

@@ -61,6 +61,7 @@ object SearchIndexMaintenance {
       s"docs table needs a first commit (schema with doc_id) before " +
         s"attaching maintenance: $docsPath")
     val once = new ExactlyOnce(spark, checkpoint)
+    val micro = new MicroBatch(spark)
     spark.readStream.format("graft")
       .option("queryType", "cdc")
       .option("startCommit", startCommit)
@@ -68,8 +69,14 @@ object SearchIndexMaintenance {
       .writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(spark, checkpoint, postPath, statsPath, totalsPath, once,
-          batch, batchId)
+        // the CDC micro-batch is persisted once, interpreted
+        // ([[MicroBatch]]): the after/before splits feed the postings,
+        // df, and totals folds on this continuously-hot path
+        micro.fold(batch) { rows =>
+          applyBatch(micro.interpreted, checkpoint, postPath, statsPath,
+            totalsPath, once, rows, batchId)
+        }
+        ()
       }
       .start()
   }
@@ -83,35 +90,29 @@ object SearchIndexMaintenance {
       once: ExactlyOnce,
       batch: DataFrame,
       batchId: Long): Unit = {
-    // persist the CDC micro-batch once: the after/before splits feed
-    // the postings, df, and totals folds on this continuously-hot path
-    val batchC = batch.persist()
-    try {
-      if (batchC.isEmpty) return // empty micro-batch: no state to change
-      val op = col(LakeTable.ChangeOpCol)
-      val bef = col(LakeTable.BeforeImageCol)
-      val after = batchC.filter(op =!= "d").select(col("doc_id"), col("text"))
-      val before = batchC.filter(op.isin("u", "d"))
-        .select(bef.getField("doc_id").as("doc_id"),
-          bef.getField("text").as("text"))
-      // preCombine stamp = this batch's END-OFFSET docs commit instant
-      // (read back from the checkpoint offset log, which pins it): one
-      // consistent version domain with the CALL procedure (a
-      // CALL-bootstrapped index hands over to streaming cleanly),
-      // monotonic because offsets are commit instants applied in order,
-      // and — unlike the table's newest instant at processing time —
-      // REPRODUCIBLE on replay: a crash-window re-fire of this batch
-      // folds the same values AND the same stamp the first attempt
-      // would have, even if newer docs commits landed meanwhile.
-      // Replay detection stays keyed to batchId via the per-table
-      // guard — the stamp only orders versions within each table.
-      val ts = OffsetLog.endOffsetInstant(spark, checkpoint, batchId).toLong
-      SearchIndex.maintain(after, before,
-        LakeTable.load(spark, postPath),
-        LakeTable.load(spark, statsPath),
-        LakeTable.load(spark, totalsPath),
-        ts,
-        guard = (t, f) => { once.runOnce(t, batchId)(f); () })
-    } finally batchC.unpersist()
+    val op = col(LakeTable.ChangeOpCol)
+    val bef = col(LakeTable.BeforeImageCol)
+    val after = batch.filter(op =!= "d").select(col("doc_id"), col("text"))
+    val before = batch.filter(op.isin("u", "d"))
+      .select(bef.getField("doc_id").as("doc_id"),
+        bef.getField("text").as("text"))
+    // preCombine stamp = this batch's END-OFFSET docs commit instant
+    // (read back from the checkpoint offset log, which pins it): one
+    // consistent version domain with the CALL procedure (a
+    // CALL-bootstrapped index hands over to streaming cleanly),
+    // monotonic because offsets are commit instants applied in order,
+    // and — unlike the table's newest instant at processing time —
+    // REPRODUCIBLE on replay: a crash-window re-fire of this batch
+    // folds the same values AND the same stamp the first attempt
+    // would have, even if newer docs commits landed meanwhile.
+    // Replay detection stays keyed to batchId via the per-table
+    // guard — the stamp only orders versions within each table.
+    val ts = OffsetLog.endOffsetInstant(spark, checkpoint, batchId).toLong
+    SearchIndex.maintain(after, before,
+      LakeTable.load(spark, postPath),
+      LakeTable.load(spark, statsPath),
+      LakeTable.load(spark, totalsPath),
+      ts,
+      guard = (t, f) => { once.runOnce(t, batchId)(f); () })
   }
 }
