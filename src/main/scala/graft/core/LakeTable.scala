@@ -1615,7 +1615,10 @@ final class LakeTable private[core] (
       }
       (s1, ks)
     }
-    val (statsM, keysAcc) = rows.treeAggregate(zero)(seqOp, combOp)
+    // the job runs under this table's session confs (an interpreted
+    // service session's included), like the table's Dataset actions
+    val (statsM, keysAcc) = org.apache.spark.sql.graftshim.InterpretedSession
+      .withConfs(spark)(rows.treeAggregate(zero)(seqOp, combOp))
     (statsM, keysAcc.map(_.toArray))
   }
 
@@ -2640,13 +2643,16 @@ object LakeTable {
   val BeforeImageCol = "_before"
   val MetaCols: Seq[String] = Seq(CommitTimeCol, RecordKeyCol, PartitionPathCol)
 
-  /** Split a CDC feed into (upserted rows projected to key+value
-    * columns, deleted keys): upserts are the non-'d' rows' after
-    * images; a delete row's key reads from the after image when
-    * present and falls back to the `_before` struct. ONE definition
-    * of the delete-key rule — every CDC-driven maintenance consumer
-    * (streaming services and CALL procedures) shares it, so a CDC
-    * schema change cannot silently drop tombstones in one of them. */
+  /** The CDC rules of every CDC-driven maintenance consumer (the
+    * streaming services, the CALL procedures and the batch gates that
+    * fold a feed): this split and [[cdcAfterAndBefore]] are their ONLY
+    * definitions, so a CDC schema change cannot silently drop
+    * tombstones or before-images in one of them.
+    *
+    * Split a CDC feed into (upserted rows projected to key+value
+    * columns, deleted keys) — for state-based reconciles: upserts are
+    * the non-'d' rows' after images; a delete row's key reads from the
+    * after image when present and falls back to the `_before` struct. */
   def cdcUpsertsAndDeletes(
       feed: DataFrame, keyCol: String, valueCols: Seq[String])
       : (DataFrame, DataFrame) = {
@@ -2656,6 +2662,19 @@ object LakeTable {
     (feed.filter(op =!= "d").select((keyCol +: valueCols).map(col): _*),
       feed.filter(op === "d").select(
         coalesce(col(keyCol), bef.getField(keyCol)).as(keyCol)))
+  }
+
+  /** Split a CDC feed into (after images, before images), both
+    * projected to `cols` — for delta folds, which add what a change
+    * brings and retract what it replaced: after images are the
+    * non-'d' rows', before images the 'u' and 'd' rows' `_before`
+    * structs. */
+  def cdcAfterAndBefore(feed: DataFrame, cols: Seq[String]): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.functions.col
+    val op = col(ChangeOpCol)
+    (feed.filter(op =!= "d").select(cols.map(col): _*),
+      feed.filter(op.isin("u", "d"))
+        .select(cols.map(c => col(BeforeImageCol).getField(c).as(c)): _*))
   }
 
   private[core] val IncomingFlag = "__incoming"

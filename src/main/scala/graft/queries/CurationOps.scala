@@ -1251,14 +1251,8 @@ object CurationOps {
         maintain(seed.select("doc_id", "text"), emptyDocs, 1L)
       }
       try {
-        val op = col(LakeTable.ChangeOpCol)
-        val bef = col(LakeTable.BeforeImageCol)
-        maintain(
-          ch.filter(op =!= "d").select("doc_id", "text"),
-          ch.filter(op.isin("u", "d"))
-            .select(bef.getField("doc_id").as("doc_id"),
-              bef.getField("text").as("text")),
-          2L)
+        val (after, before) = LakeTable.cdcAfterAndBefore(ch, Seq("doc_id", "text"))
+        maintain(after, before, 2L)
       } finally { ch.unpersist(); () }
 
       // scoring: the SHARED exact-arithmetic BM25 contract over the

@@ -668,7 +668,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
           "stats_table" -> StringT, "totals_table" -> StringT,
           "since_instant" -> StringT),
         "postings BIGINT") { input =>
-        import org.apache.spark.sql.functions.col
         val docs = lakeOf(input.getUTF8String(0).toString)
         val post = lakeOf(input.getUTF8String(1).toString)
         val stats = lakeOf(input.getUTF8String(2).toString)
@@ -677,15 +676,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
         val snap = docs.snapshot().select("doc_id", "text")
         val (after, before) =
           if (since.isEmpty) (snap, snap.limit(0))
-          else {
-            val feed = docs.cdc(since)
-            val op = col(LakeTable.ChangeOpCol)
-            val bef = col(LakeTable.BeforeImageCol)
-            (feed.filter(op =!= "d").select(col("doc_id"), col("text")),
-              feed.filter(op.isin("u", "d")).select(
-                bef.getField("doc_id").as("doc_id"),
-                bef.getField("text").as("text")))
-          }
+          else LakeTable.cdcAfterAndBefore(docs.cdc(since), Seq("doc_id", "text"))
         // ts = the docs table's newest instant: monotonic across calls
         // and derived from table state, not the wall clock
         val commits = docs.timeline.commits()

@@ -6,8 +6,9 @@ import org.apache.spark.sql.SparkSession
 import graft.core.LakeTable
 
 /** Per-query exactly-once batch guard, shared by the streaming sink
-  * ([[graft.sql.GraftStreamSink]]) and foreachBatch consumers
-  * ([[MvMaintenance]]).
+  * ([[graft.sql.GraftStreamSink]]), the foreachBatch maintenance
+  * services (one guard per checkpoint, made by the service skeleton
+  * [[MicroBatch.start]]) and `CALL maintain_search_index`.
   *
   * The batch id is recorded atomically WITH the data commit (the
   * commit's `tag`), so a crash between the commit and the sidecar

@@ -24,13 +24,16 @@ import graft.core.LakeTable
   *      offsets (commit instants) this is end-to-end exactly-once.
   *
   * The MV table must exist (create it with the group key as primary
-  * key); the very first batch sees `startCommit="0"`'s bootstrap feed
-  * (every current row as an insert), so the MV builds itself from the
-  * same fold — no separate backfill job. `mvSchema` declares the MV's
-  * data columns so the bootstrap batch hands `fold` an EMPTY frame of
-  * that shape rather than the zero-column snapshot of a never-written
-  * table — the fold can always join on its group key without
-  * special-casing batch 0. */
+  * key). `mvSchema` declares the MV's data columns so the bootstrap
+  * batch hands `fold` an EMPTY frame of that shape rather than the
+  * zero-column snapshot of a never-written table — the fold can always
+  * join on its group key without special-casing batch 0.
+  *
+  * The service runs on the one skeleton, [[MicroBatch.start]], so, like
+  * the other three services: `deltasOf` and `fold` see the batch
+  * persisted once in an interpreted clone of the caller's session, whose
+  * conf is fixed at `start`; and an empty batch is skipped before the
+  * guard (no MV rewrite from `fold(stored, ∅)`). */
 object MvMaintenance {
 
   def start(
@@ -41,35 +44,18 @@ object MvMaintenance {
       mvSchema: org.apache.spark.sql.types.StructType,
       deltasOf: DataFrame => DataFrame,
       fold: (DataFrame, DataFrame) => DataFrame,
-      startCommit: String = "0"): StreamingQuery = {
-    require(LakeTable.exists(spark, mvPath),
-      s"create the MV table (group key as primaryKey) before starting: $mvPath")
-    // the CDC source fixes its schema when the stream starts; a base
-    // table with no commits yet exposes a metadata-only feed that the
-    // delta reduction could never bind against
-    require(LakeTable.load(spark, basePath).schema.fields.nonEmpty,
-      s"base table needs a first commit (schema) before attaching the " +
-        s"MV refresh: $basePath")
-    val once = new ExactlyOnce(spark, checkpoint)
-    spark.readStream.format("graft")
-      .option("queryType", "cdc")
-      .option("startCommit", startCommit)
-      .load(basePath)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val mv = LakeTable.load(spark, mvPath)
-        once.runOnce(mv, batchId) { tag =>
-          val deltas = deltasOf(batch)
-          val snap = mv.snapshot().drop(LakeTable.MetaCols: _*)
-          val stored =
-            if (snap.columns.nonEmpty) snap
-            else spark.createDataFrame(
-              new java.util.ArrayList[org.apache.spark.sql.Row](), mvSchema)
-          mv.upsert(fold(stored, deltas), tag = tag)
-        }
-        ()
-      }
-      .start()
-  }
+      startCommit: String = "0"): StreamingQuery =
+    MicroBatch.start(spark, basePath, Nil, Seq(mvPath ->
+        "create the MV table (group key as primaryKey) before starting"),
+        checkpoint, startCommit) { b =>
+      val mv = b.load(mvPath)
+      b.guard(mv, tag => {
+        val snap = mv.snapshot().drop(LakeTable.MetaCols: _*)
+        val stored =
+          if (snap.columns.nonEmpty) snap
+          else b.spark.createDataFrame(
+            new java.util.ArrayList[org.apache.spark.sql.Row](), mvSchema)
+        mv.upsert(fold(stored, deltasOf(b.rows)), tag = tag)
+      })
+    }
 }

@@ -5,7 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** The ONE parser for this package's offset wire format
   * (`{"instant":"…"}`, written by [[CommitOffset]]/[[CdcOffset]]):
   * checkpoint recovery in [[CommitTailStream]], [[GraftCdcSource]],
-  * and both maintenance services' offset-log reads all go through it,
+  * and the maintenance services' offset-log read
+  * ([[MicroBatch.Batch.ts]]) all go through it,
   * so a change to the offset JSON shape cannot silently break one
   * copy of a hand-duplicated regex. */
 private[streaming] object OffsetLog {
@@ -20,8 +21,8 @@ private[streaming] object OffsetLog {
     * checkpoint's offset log (`offsets/<batchId>`). The engine writes
     * this file BEFORE invoking foreachBatch, so it always exists
     * there, and a replayed batch re-reads the identical pinned value —
-    * the property both maintenance services' preCombine stamps rely
-    * on. Parsing is restricted to the per-SOURCE offset lines
+    * the property the maintenance services' preCombine stamp
+    * ([[MicroBatch.Batch.ts]]) relies on. Parsing is restricted to the per-SOURCE offset lines
     * (OffsetSeqLog layout: line 1 = version, line 2 = metadata JSON,
     * lines 3+ = one serialized offset per source) and exactly one
     * source offset is asserted: these queries have one source, and a

@@ -34,14 +34,12 @@ import graft.core.LakeTable
   * BEFORE the tagged pairs commit
   * ([[graft.queries.MultimodalOps.phashReconcile]]'s write order).
   *
-  * Bootstrap: `startCommit="0"` replays every current payload as an
-  * insert, so batch 0 builds the store and pairs from the same code
-  * path — no separate backfill job (the [[MvMaintenance]] convention).
-  *
-  * PreCombine stamps are the batch's end-offset docs commit instant
-  * (pinned in the checkpoint offset log) — one version domain with
-  * batch-run reconciles, monotonic across checkpoint resets, the
-  * [[SearchIndexMaintenance]] convention. */
+  * Runs on the skeleton it shares with [[NearDupMaintenance]]
+  * ([[NearDupMaintenance.signatureService]] over [[MicroBatch.start]]),
+  * which bootstraps by replay and skips empty batches. PreCombine
+  * stamps are the batch's end-offset docs commit instant
+  * ([[MicroBatch.Batch.ts]]), one version domain with batch-run
+  * reconciles. */
 object SignatureMaintenance {
 
   /** JSONL decode census sidecar inside the checkpoint dir: one
@@ -177,20 +175,21 @@ object SignatureMaintenance {
       // contract): create it keyed (blk, doc_id) with statsColumns
       // (blk, ts) and attach it from the service's FIRST batch
       postingsPath: Option[String] = None,
-      // fold cadence: every N batches re-cluster the sig store (by
-      // the hash halves), the posting index (by blk) and the pairs
+      // fold cadence: every N batches (each non-empty batch whose id
+      // is a multiple of N) re-cluster the sig store (by the hash
+      // halves), the posting index (by blk) and the pairs
       // table, folding the accumulated delta tails so the tiered MOR
       // merge and the col-stats file skipping stay O(churn) between
       // folds. 0 = off (tiny fixtures; an external table-service
       // cadence). The fold is a replace commit — OCC-safe, and a
       // crash mid-fold leaves the table unchanged.
       clusterEvery: Int = 0): StreamingQuery =
-    NearDupMaintenance.startIndexService(spark, payloadsPath, payloadCol,
+    NearDupMaintenance.signatureService(spark, payloadsPath, payloadCol,
         sigPath, pairsPath, postingsPath, checkpoint, startCommit,
         clusterEvery, Seq("hash_hi", "hash_lo"), "blk") { b =>
       val stats = graft.queries.MultimodalOps.phashReconcile(
         b.upserted.withColumnRenamed(payloadCol, "payload"), b.deleted,
-        b.sigs, b.pairs, b.ts, tag = b.tag, hashFn = hashFn,
+        b.sigs, b.pairs, b.batch.ts, tag = b.tag, hashFn = hashFn,
         postings = b.postings)
       // per-batch decode census, appended to a checkpoint sidecar: the
       // service's drop-rate is a monitored number, not an invisible
@@ -199,7 +198,7 @@ object SignatureMaintenance {
       // replayed batch (marker lost) appends a duplicate line, which an
       // aggregation by batch id collapses.
       appendStatsLine(spark, checkpoint,
-        s"""{"batch":${b.batchId},"instant":${b.ts},""" +
+        s"""{"batch":${b.batch.id},"instant":${b.batch.ts},""" +
           s""""hashed":${stats.hashed},"dropped":${stats.dropped}}""")
     }
 }

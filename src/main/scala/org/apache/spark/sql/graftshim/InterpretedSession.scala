@@ -3,6 +3,7 @@ package org.apache.spark.sql.graftshim
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.CodegenObjectFactoryMode
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.internal.SQLConf
 
 /** A clone of a caller's session that plans and evaluates without
@@ -35,4 +36,13 @@ object InterpretedSession {
   def replan(session: SparkSession, df: DataFrame): DataFrame =
     ClassicDataset.ofRows(session.asInstanceOf[ClassicSession],
       df.queryExecution.analyzed)
+
+  /** Runs `body` with `session`'s SQL confs set as the thread's job
+    * properties, as every Dataset action does: an RDD action over a
+    * frame (`df.rdd.treeAggregate`) otherwise evaluates the frame's
+    * expressions on the executors under whatever confs its caller's
+    * thread carries, e.g. compiled inside an interpreted session's
+    * fold. */
+  def withConfs[T](session: SparkSession)(body: => T): T =
+    SQLExecution.withSQLConfPropagated(session.asInstanceOf[ClassicSession])(body)
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,12 +9,8 @@ import graft.core._
 /** Scenario + unit specs for the LakeTable core, transcribed from the
   * reference demos (SURVEY.md §5.1-5.2). */
 class LakeTableSpec extends AnyFunSuite {
-  import TestSpark.spark
+  import TestSpark.{spark, tmpPath}
   import spark.implicits._
-
-  private def tmp(): String =
-    Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "lake_").toString + "/t"
 
   private def demoProps = TableProps(
     name = "test_hudi_table",
@@ -30,7 +24,7 @@ class LakeTableSpec extends AnyFunSuite {
       .toSet
 
   test("SparkSQLDemo full scenario: create→insert→update→delete→merge") {
-    val path = tmp()
+    val path = tmpPath("lake_")
     val t = LakeTable.create(spark, path, demoProps)
 
     // insert into values (1,...),(2,...) — SparkSQLDemo.scala:56
@@ -71,7 +65,7 @@ class LakeTableSpec extends AnyFunSuite {
   }
 
   test("preCombine semantics: batch dedup + LatestByOrdering vs OverwriteWithLatest") {
-    val path = tmp()
+    val path = tmpPath("lake_")
     val t = LakeTable.create(spark, path, demoProps)
     // intra-batch dup: larger ts wins
     t.upsert(Seq((1, "a", 1.0, 100L, "d1"), (1, "b", 2.0, 200L, "d1"))
@@ -90,7 +84,7 @@ class LakeTableSpec extends AnyFunSuite {
   }
 
   test("partition-scoped upsert: same key in another partition is a new record") {
-    val path = tmp()
+    val path = tmpPath("lake_")
     val t = LakeTable.create(spark, path, demoProps)
     t.upsert(Seq((1, "a", 1.0, 100L, "d1")).toDF("id", "name", "price", "ts", "dt"))
     t.upsert(Seq((1, "b", 2.0, 200L, "d2")).toDF("id", "name", "price", "ts", "dt"))
@@ -101,7 +95,7 @@ class LakeTableSpec extends AnyFunSuite {
   }
 
   test("IncrementalQuery scenario: commit-range reads, begin-exclusive") {
-    val path = tmp()
+    val path = tmpPath("lake_")
     val t = LakeTable.create(spark, path, demoProps)
     // 5 single-row commits — IncrementalQuery.scala:84-88
     val batches = Seq(
@@ -127,7 +121,7 @@ class LakeTableSpec extends AnyFunSuite {
   }
 
   test("unchanged rows keep their commit time through COW rewrites") {
-    val path = tmp()
+    val path = tmpPath("lake_")
     val t = LakeTable.create(spark, path, demoProps)
     val c1 = t.upsert(Seq((1, "a", 1.0, 100L, "d1"), (2, "b", 1.0, 100L, "d1"))
       .toDF("id", "name", "price", "ts", "dt"))
@@ -140,7 +134,7 @@ class LakeTableSpec extends AnyFunSuite {
   }
 
   test("schema evolution: additive column on upsert") {
-    val path = tmp()
+    val path = tmpPath("lake_")
     val t = LakeTable.create(spark, path, demoProps)
     t.upsert(Seq((1, "a", 1.0, 100L, "d1")).toDF("id", "name", "price", "ts", "dt"))
     t.upsert(Seq((2, "b", 2.0, 100L, "d1", 999.0))
@@ -178,14 +172,14 @@ class LakeTableSpec extends AnyFunSuite {
         (2, "a2", 22, 2200, "2022-10-09"),
         (4, "a4", 40, 4000, "2022-10-08")), s"got $got")
     }
-    val srcDir = tmp()
+    val srcDir = tmpPath("lake_")
     srcRows.toDF("id", "name", "value", "ts", "dt").write.parquet(srcDir)
 
-    val full = LakeTable.bootstrapFull(spark, tmp(), srcDir, props)
+    val full = LakeTable.bootstrapFull(spark, tmpPath("lake_"), srcDir, props)
     full.upsert(appendBatch.toDF("id", "name", "value", "ts", "dt"))
     checkFinal(full)
 
-    val meta = LakeTable.bootstrapMetadata(spark, tmp(), srcDir, props)
+    val meta = LakeTable.bootstrapMetadata(spark, tmpPath("lake_"), srcDir, props)
     // snapshot over foreign files works before any rewrite
     assert(meta.snapshot().count() == 2)
     meta.upsert(appendBatch.toDF("id", "name", "value", "ts", "dt"))
@@ -196,11 +190,11 @@ class LakeTableSpec extends AnyFunSuite {
   }
 
   test("incremental read includes bootstrap-adopted records") {
-    val srcDir = tmp()
+    val srcDir = tmpPath("lake_")
     Seq((1, "a1", 10, 1000, "2022-10-08"), (2, "a2", 20, 2000, "2022-10-09"))
       .toDF("id", "name", "value", "ts", "dt").write.parquet(srcDir)
     val props = TableProps("bootstrap_inc", Seq("id"), Some("ts"), Seq.empty)
-    val t = LakeTable.bootstrapMetadata(spark, tmp(), srcDir, props)
+    val t = LakeTable.bootstrapMetadata(spark, tmpPath("lake_"), srcDir, props)
     // external files get synthesized meta columns: the adopted rows
     // appear in an incremental read spanning the bootstrap commit
     val inc = t.incremental("0")
@@ -212,7 +206,7 @@ class LakeTableSpec extends AnyFunSuite {
   }
 
   test("snapshotWhere prunes partitions driver-side") {
-    val path = tmp()
+    val path = tmpPath("lake_")
     val t = LakeTable.create(spark, path, demoProps)
     t.upsert(Seq((1, "a", 1.0, 100L, "d1"), (2, "b", 1.0, 100L, "d2"))
       .toDF("id", "name", "price", "ts", "dt"))
@@ -223,7 +217,7 @@ class LakeTableSpec extends AnyFunSuite {
   }
 
   test("cdc: net change feed with ops and before images (COW)") {
-    val path = tmp()
+    val path = tmpPath("lake_")
     val t = LakeTable.create(spark, path, demoProps)
     val c1 = t.upsert(Seq(
       (1, "a", 1.0, 1L, "d1"), (2, "b", 2.0, 1L, "d1"),
@@ -254,7 +248,7 @@ class LakeTableSpec extends AnyFunSuite {
   }
 
   test("cdc: I/O is churn-proportional (untouched partitions not read)") {
-    val path = tmp()
+    val path = tmpPath("lake_")
     val t = LakeTable.create(spark, path, demoProps)
     val c1 = t.upsert(Seq((1, "a", 1.0, 1L, "d1"), (2, "b", 2.0, 1L, "d2"),
       (3, "c", 3.0, 1L, "d3")).toDF("id", "name", "price", "ts", "dt"))
@@ -266,7 +260,7 @@ class LakeTableSpec extends AnyFunSuite {
   }
 
   test("cdc: value-diff across a replace commit (restore in the range)") {
-    val path = tmp()
+    val path = tmpPath("lake_")
     val t = LakeTable.create(spark, path, demoProps)
     val c1 = t.upsert(Seq((1, "a", 1.0, 1L, "d1"), (2, "b", 2.0, 1L, "d1"))
       .toDF("id", "name", "price", "ts", "dt"))
@@ -293,7 +287,7 @@ class LakeTableSpec extends AnyFunSuite {
   }
 
   test("cdc: MOR tombstones surface as deletes; format('graft') cdc option") {
-    val path = tmp()
+    val path = tmpPath("lake_")
     val t = LakeTable.create(spark, path,
       demoProps.copy(tableType = "mor"))
     val c1 = t.upsert(Seq((1, "a", 1.0, 1L, "d1"), (2, "b", 2.0, 1L, "d1"))
@@ -315,7 +309,7 @@ class LakeTableSpec extends AnyFunSuite {
     // update must then consolidate to ONE source image, not write the
     // image once per stored location. Covers both table types.
     for (tt <- Seq("cow", "mor")) {
-      val t = LakeTable.create(spark, tmp(), demoProps.copy(tableType = tt))
+      val t = LakeTable.create(spark, tmpPath("lake_"), demoProps.copy(tableType = tt))
       t.upsert(Seq((1, "a", 1.0, 100L, "d1"), (2, "b", 1.0, 100L, "d1"))
         .toDF("id", "name", "price", "ts", "dt"))
       t.upsert(Seq((1, "a2", 2.0, 200L, "d2"))
@@ -332,7 +326,7 @@ class LakeTableSpec extends AnyFunSuite {
 
   test("snapshotSkipping: stats-pruned reads stay MOR-exact across delta overlays") {
     import graft.core.ColPred
-    val t = LakeTable.create(spark, tmp(), TableProps(
+    val t = LakeTable.create(spark, tmpPath("lake_"), TableProps(
       "skip", Seq("id"), Some("ts"), Seq.empty, tableType = "mor",
       statsColumns = Seq("fp", "ts")))
     // 100 keys in 10 fp-groups g0..g9

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import scala.concurrent.Await
@@ -16,7 +15,7 @@ import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{LakeTable, TableProps}
-import graft.streaming.{MicroBatch, NearDupMaintenance, SearchIndexMaintenance}
+import graft.streaming.{MicroBatch, MvMaintenance, NearDupMaintenance, SearchIndexMaintenance}
 
 /** The index services' micro-batch path ([[MicroBatch]]): every CDC
   * batch is persisted and folded in an interpreted clone of the
@@ -24,14 +23,11 @@ import graft.streaming.{MicroBatch, NearDupMaintenance, SearchIndexMaintenance}
   * background writes run under their submitter's Spark local
   * properties. */
 class MicroBatchSpec extends AnyFunSuite {
-  import TestSpark.spark
+  import TestSpark.{spark, tmpDir}
   import spark.implicits._
 
   private val WholeStage = "spark.sql.codegen.wholeStage"
   private val FactoryMode = "spark.sql.codegen.factoryMode"
-
-  private def tmpDir(prefix: String) =
-    Files.createTempDirectory(java.nio.file.Paths.get("target"), prefix)
 
   /** Every job started while `body` runs, as seen by a listener. */
   private def jobsOf(body: => Unit): Seq[SparkListenerJobStart] = {
@@ -97,7 +93,6 @@ class MicroBatchSpec extends AnyFunSuite {
       assert(LakeTable.load(spark, docs.basePath).snapshot().count() == 3)
     } finally queries.foreach(_.stop())
     assert(Seq(WholeStage, FactoryMode).map(k => k -> spark.conf.get(k)) == callerConf)
-    org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
   }
 
   test("a batch of large payloads folds persisted, its rows never sent to the driver") {
@@ -187,5 +182,45 @@ class MicroBatchSpec extends AnyFunSuite {
     }
     assert(jobs.map(_.properties.getProperty("spark.jobGroup.id")).sorted ==
       Seq("group_a", "group_b"))
+  }
+
+  test("the MV service folds its CDC batches on the same interpreted path") {
+    spark.catalog.clearCache()
+    val callerConf = Seq(WholeStage, FactoryMode).map(k => k -> spark.conf.get(k))
+    val root = tmpDir("mbmv_")
+    val base = LakeTable.create(spark, s"$root/base", TableProps(
+      "mbbase", Seq("id"), Some("ts"), Seq.empty))
+    val mv = LakeTable.create(spark, s"$root/mv", TableProps(
+      "mbmv", Seq("grp"), None, Seq.empty))
+    base.upsert(Seq((1, "g1", 1L), (2, "g1", 1L), (3, "g2", 1L)).toDF("id", "grp", "ts"))
+    val op = col(LakeTable.ChangeOpCol)
+    val deltasOf = (df: org.apache.spark.sql.DataFrame) =>
+      df.groupBy(coalesce(col("grp"), col(LakeTable.BeforeImageCol).getField("grp")).as("grp"))
+        .agg(sum(when(op === "i", 1L).when(op === "d", -1L).otherwise(0L)).as("dcnt"))
+    val fold = (stored: org.apache.spark.sql.DataFrame, deltas: org.apache.spark.sql.DataFrame) =>
+      stored.join(deltas, Seq("grp"), "full_outer").select(col("grp"),
+        (coalesce(col("cnt"), lit(0L)) + coalesce(col("dcnt"), lit(0L))).as("cnt"))
+    val q = MvMaintenance.start(spark, base.basePath, mv.basePath, s"$root/ckpt",
+      org.apache.spark.sql.types.StructType.fromDDL("grp STRING, cnt BIGINT"), deltasOf, fold)
+    try {
+      q.processAllAvailable() // bootstrap
+      val jobs = jobsOf {
+        base.upsertWithDeletes(Seq((4, "g2", 2L)).toDF("id", "grp", "ts"), Seq(1).toDF("id"))
+        q.processAllAvailable()
+      }
+      assert(spark.sharedState.cacheManager.isEmpty, "micro-batch left cache entries")
+      // every SQL execution of the churn batch is the fold's
+      val sqlJobs = jobs.map(_.properties).filter(p =>
+        p.getProperty("sql.streaming.queryId") == q.id.toString &&
+          p.getProperty("spark.sql.execution.id") != null)
+      assert(sqlJobs.map(_.getProperty("streaming.sql.batchId")).distinct.size == 1,
+        "expected one churn batch")
+      val compiled = sqlJobs.filterNot(p =>
+        p.getProperty(WholeStage) == "false" && p.getProperty(FactoryMode) == "NO_CODEGEN")
+      assert(compiled.isEmpty, s"${compiled.size} of ${sqlJobs.size} SQL jobs ran with codegen")
+      assert(mv.snapshot().select("grp", "cnt").as[(String, Long)].collect().toSet ==
+        Set(("g1", 1L), ("g2", 2L)))
+    } finally q.stop()
+    assert(Seq(WholeStage, FactoryMode).map(k => k -> spark.conf.get(k)) == callerConf)
   }
 }

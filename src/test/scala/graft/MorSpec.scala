@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,12 +10,8 @@ import graft.core._
   * delta-append upserts, merge-on-read snapshots, tombstone deletes,
   * inline + explicit compaction, read-optimized SQL view. */
 class MorSpec extends AnyFunSuite {
-  import TestSpark.spark
+  import TestSpark.{spark, tmpPath}
   import spark.implicits._
-
-  private def tmp(): String =
-    Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "mor_").toString + "/t"
 
   private def morProps(compactEvery: Int = 0) = TableProps(
     "mor_t", Seq("id"), Some("ts"), Seq("dt"),
@@ -28,7 +22,7 @@ class MorSpec extends AnyFunSuite {
       .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSet
 
   test("delta upserts merge on read; no files are rewritten") {
-    val t = LakeTable.create(spark, tmp(), morProps())
+    val t = LakeTable.create(spark, tmpPath("mor_"), morProps())
     t.upsert(Seq((1, "a", 1L, "d1"), (2, "b", 1L, "d1")).toDF("id", "v", "ts", "dt"))
     t.upsert(Seq((1, "a2", 2L, "d1"), (3, "c", 1L, "d1")).toDF("id", "v", "ts", "dt"))
     assert(rows(t) == Set((1, "a2", 2L), (2, "b", 1L), (3, "c", 1L)))
@@ -38,7 +32,7 @@ class MorSpec extends AnyFunSuite {
   }
 
   test("tombstone delete is honored by the merged view; compaction folds it") {
-    val t = LakeTable.create(spark, tmp(), morProps())
+    val t = LakeTable.create(spark, tmpPath("mor_"), morProps())
     t.upsert(Seq((1, "a", 1L, "d1"), (2, "b", 1L, "d1")).toDF("id", "v", "ts", "dt"))
     t.delete(Seq((1, "d1")).toDF("id", "dt"))
     assert(rows(t) == Set((2, "b", 1L)))
@@ -53,7 +47,7 @@ class MorSpec extends AnyFunSuite {
   }
 
   test("predicate DML on MOR appends deltas; no base or delta file is rewritten") {
-    val t = LakeTable.create(spark, tmp(), morProps())
+    val t = LakeTable.create(spark, tmpPath("mor_"), morProps())
     // base + one delta per partition
     t.upsert(Seq((1, "a", 1L, "d1"), (2, "b", 1L, "d2"), (3, "c", 1L, "d3"))
       .toDF("id", "v", "ts", "dt"))
@@ -101,7 +95,7 @@ class MorSpec extends AnyFunSuite {
     // (key, partition) leaving the old row alive; on COW the rewrite
     // would keep the old physical placement. MERGE is the
     // partition-migrating path.
-    val t = LakeTable.create(spark, tmp(), morProps())
+    val t = LakeTable.create(spark, tmpPath("mor_"), morProps())
     t.upsert(Seq((1, "a", 1L, "d1")).toDF("id", "v", "ts", "dt"))
     intercept[IllegalArgumentException] {
       t.updateWhere(col("id") === 1, Map("dt" -> lit("d2")))
@@ -117,12 +111,9 @@ class MorSpec extends AnyFunSuite {
     // leaves schema {doc_id} with zero live rows — the next batch must
     // take the bootstrap branch, not select a missing bands column
     import graft.queries.NearDupIndex
-    import java.nio.file.Files
-    def tmpd(p: String) = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), p).toString + "/t"
-    val sigs = LakeTable.create(spark, tmpd("ndx_sigs_"), TableProps(
+    val sigs = LakeTable.create(spark, tmpPath("ndx_sigs_"), TableProps(
       "sigs", Seq("doc_id"), Some("ts"), Seq.empty, tableType = "mor"))
-    val pairs = LakeTable.create(spark, tmpd("ndx_pairs_"), TableProps(
+    val pairs = LakeTable.create(spark, tmpPath("ndx_pairs_"), TableProps(
       "pairs", Seq("a", "b"), Some("ts"), Seq.empty, tableType = "mor"))
     val famA = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
     val docs = Seq((1L, famA), (2L, famA + " extra")).toDF("doc_id", "text")
@@ -137,7 +128,7 @@ class MorSpec extends AnyFunSuite {
   }
 
   test("time travel to a pre-compaction instant merges that era's deltas") {
-    val t = LakeTable.create(spark, tmp(), morProps())
+    val t = LakeTable.create(spark, tmpPath("mor_"), morProps())
     t.upsert(Seq((1, "a", 1L, "d1"), (2, "b", 1L, "d1")).toDF("id", "v", "ts", "dt"))
     // delta update + tombstone, then a compaction and a later update:
     // as-of the pre-compaction instant the read must serve the
@@ -237,7 +228,7 @@ class MorSpec extends AnyFunSuite {
   }
 
   test("keyed merge on MOR is a delta append; no file group is touched") {
-    val t = LakeTable.create(spark, tmp(), morProps())
+    val t = LakeTable.create(spark, tmpPath("mor_"), morProps())
     t.upsert(Seq((1, "a", 1L, "d1"), (2, "b", 1L, "d2")).toDF("id", "v", "ts", "dt"))
     t.upsert(Seq((1, "a2", 2L, "d1"), (2, "b2", 2L, "d2")).toDF("id", "v", "ts", "dt"))
     val before = t.timeline.liveFiles(None).map(_.path).toSet
@@ -264,7 +255,7 @@ class MorSpec extends AnyFunSuite {
   }
 
   test("inline compaction after N delta commits (compaction.delta_commits)") {
-    val t = LakeTable.create(spark, tmp(), morProps(compactEvery = 2))
+    val t = LakeTable.create(spark, tmpPath("mor_"), morProps(compactEvery = 2))
     t.upsert(Seq((1, "a", 1L, "d1")).toDF("id", "v", "ts", "dt"))
     assert(t.timeline.commits().map(_.action) == Seq("deltacommit"))
     t.upsert(Seq((2, "b", 1L, "d1")).toDF("id", "v", "ts", "dt"))
@@ -275,7 +266,7 @@ class MorSpec extends AnyFunSuite {
   }
 
   test("per-payload ordering: larger preCombine wins over later commit") {
-    val t = LakeTable.create(spark, tmp(), morProps())
+    val t = LakeTable.create(spark, tmpPath("mor_"), morProps())
     t.upsert(Seq((1, "fresh", 5L, "d1")).toDF("id", "v", "ts", "dt"))
     // late-arriving update with a SMALLER ordering value must lose
     t.upsert(Seq((1, "stale", 3L, "d1")).toDF("id", "v", "ts", "dt"))
@@ -286,7 +277,7 @@ class MorSpec extends AnyFunSuite {
   }
 
   test("ordered tombstone: late delete with lower preCombine loses") {
-    val t = LakeTable.create(spark, tmp(), morProps())
+    val t = LakeTable.create(spark, tmpPath("mor_"), morProps())
     t.upsert(Seq((1, "a", 5L, "d1"), (2, "b", 5L, "d1")).toDF("id", "v", "ts", "dt"))
     // delete carrying ts=3 < stored 5: ignored (DefaultHoodieRecordPayload)
     t.delete(Seq((1, 3L, "d1")).toDF("id", "ts", "dt"))
@@ -300,7 +291,7 @@ class MorSpec extends AnyFunSuite {
   }
 
   test("snapshotWhere on MOR merges on read and drops tombstones") {
-    val t = LakeTable.create(spark, tmp(), morProps())
+    val t = LakeTable.create(spark, tmpPath("mor_"), morProps())
     t.upsert(Seq((1, "a", 1L, "d1"), (2, "b", 1L, "d1"), (3, "c", 1L, "d2"))
       .toDF("id", "v", "ts", "dt"))
     t.upsert(Seq((1, "a2", 2L, "d1")).toDF("id", "v", "ts", "dt"))
@@ -312,7 +303,7 @@ class MorSpec extends AnyFunSuite {
   }
 
   test("incremental read returns the delta rows of the range") {
-    val t = LakeTable.create(spark, tmp(), morProps())
+    val t = LakeTable.create(spark, tmpPath("mor_"), morProps())
     val c1 = t.upsert(Seq((1, "a", 1L, "d1")).toDF("id", "v", "ts", "dt"))
     t.upsert(Seq((1, "a2", 2L, "d1"), (2, "b", 1L, "d1")).toDF("id", "v", "ts", "dt"))
     val inc = t.incremental(c1).select("id", "v").collect()
@@ -321,13 +312,13 @@ class MorSpec extends AnyFunSuite {
   }
 
   test("streaming ingest into MOR with inline compaction (TestStreamingMOR shape)") {
-    val path = tmp()
+    val path = tmpPath("mor_")
     LakeTable.create(spark, path, morProps(compactEvery = 2))
     implicit val sctx = spark.sqlContext
     val input = MemoryStream[(Int, String, Long, String)]
     val q = input.toDF().toDF("id", "v", "ts", "dt")
       .writeStream.format("graft")
-      .option("checkpointLocation", tmp())
+      .option("checkpointLocation", tmpPath("mor_"))
       .start(path)
     try {
       input.addData((1, "a", 1L, "d1")); q.processAllAvailable()
@@ -362,7 +353,7 @@ class MorSpec extends AnyFunSuite {
   }
 
   test("compaction rewrites only delta-affected partitions' base files") {
-    val t = LakeTable.create(spark, tmp(), morProps())
+    val t = LakeTable.create(spark, tmpPath("mor_"), morProps())
     t.upsert(Seq((1, "a", 1L, "d1"), (2, "b", 1L, "d2")).toDF("id", "v", "ts", "dt"))
     t.compact() // establish base files in both partitions
     val baseD2 = t.timeline.liveFiles(None)
@@ -400,7 +391,7 @@ class MorSpec extends AnyFunSuite {
   }
 
   test("MOR incremental returns merged changed rows, never raw tombstones") {
-    val t = LakeTable.create(spark, tmp(), morProps())
+    val t = LakeTable.create(spark, tmpPath("mor_"), morProps())
     val c1 = t.upsert(Seq((1, "a", 1L, "d1"), (2, "b", 1L, "d1")).toDF("id", "v", "ts", "dt"))
     t.upsert(Seq((1, "a2", 2L, "d1")).toDF("id", "v", "ts", "dt"))
     t.delete(Seq((2, "d1")).toDF("id", "dt"))
@@ -414,7 +405,7 @@ class MorSpec extends AnyFunSuite {
   }
 
   test("morPayload='overwrite': later commit wins regardless of ordering value") {
-    val t = LakeTable.create(spark, tmp(), morProps().copy(morPayload = "overwrite"))
+    val t = LakeTable.create(spark, tmpPath("mor_"), morProps().copy(morPayload = "overwrite"))
     t.upsert(Seq((1, "fresh", 5L, "d1")).toDF("id", "v", "ts", "dt"))
     // stale ts=3 arrives later: with the overwrite payload it REPLACES
     t.upsert(Seq((1, "stale", 3L, "d1")).toDF("id", "v", "ts", "dt"))
@@ -422,7 +413,7 @@ class MorSpec extends AnyFunSuite {
     // an EXPLICIT overwrite policy on a 'latest' MOR table would be
     // silently ignored (the merge happens at read time) — fails loudly
     intercept[IllegalArgumentException] {
-      LakeTable.create(spark, tmp(), morProps())
+      LakeTable.create(spark, tmpPath("mor_"), morProps())
         .upsert(Seq((1, "x", 1L, "d1")).toDF("id", "v", "ts", "dt"),
           MergePolicy.OverwriteWithLatest)
     }
@@ -434,7 +425,7 @@ class MorSpec extends AnyFunSuite {
     // LATER COMMIT wins even against a stored row with a larger
     // ordering value (a concurrent delta in the compaction-to-probe
     // window is the production shape of this competition)
-    val t = LakeTable.create(spark, tmp(), morProps().copy(morPayload = "overwrite"))
+    val t = LakeTable.create(spark, tmpPath("mor_"), morProps().copy(morPayload = "overwrite"))
     t.upsert(Seq((1, "stored", 9L, "d1"), (2, "keep", 1L, "d1"))
       .toDF("id", "v", "ts", "dt"))
     // MERGE-shaped statement: upsert key 1 with a LOWER ts, no delete ids
@@ -443,7 +434,7 @@ class MorSpec extends AnyFunSuite {
       upserts = Some(Seq((1, "statement", 5L, "d1")).toDF("id", "v", "ts", "dt")))
     assert(rows(t) == Set((1, "statement", 5L), (2, "keep", 1L)))
     // contrast: the default 'latest' payload keeps the larger ordering
-    val l = LakeTable.create(spark, tmp(), morProps())
+    val l = LakeTable.create(spark, tmpPath("mor_"), morProps())
     l.upsert(Seq((1, "stored", 9L, "d1")).toDF("id", "v", "ts", "dt"))
     l.applyDeltas(
       deleteIds = None,
@@ -458,7 +449,7 @@ class MorSpec extends AnyFunSuite {
     // across every merge semantic: update winning, late update losing
     // (smaller preCombine), tombstone, re-insert after tombstone, and
     // untouched pass-through keys.
-    val t = LakeTable.create(spark, tmp(), morProps())
+    val t = LakeTable.create(spark, tmpPath("mor_"), morProps())
     t.upsert((1 to 8).map(i => (i, s"v$i", 2L, "d1")).toDF("id", "v", "ts", "dt"))
     t.cluster() // replace commit, dedupedKeys stamped true
     t.upsert(Seq((2, "b2", 3L, "d1"), (9, "new", 3L, "d1")).toDF("id", "v", "ts", "dt"))
@@ -488,7 +479,7 @@ class MorSpec extends AnyFunSuite {
   }
 
   test("single deduped replace era reads with no merge windows") {
-    val t = LakeTable.create(spark, tmp(), morProps())
+    val t = LakeTable.create(spark, tmpPath("mor_"), morProps())
     t.upsert(Seq((1, "a", 1L, "d1"), (2, "b", 2L, "d1")).toDF("id", "v", "ts", "dt"))
     t.upsert(Seq((1, "a2", 3L, "d1")).toDF("id", "v", "ts", "dt"))
     t.cluster()

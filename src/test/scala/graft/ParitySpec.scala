@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,12 +10,8 @@ import graft.util.{DfUtils, FsUtils}
   * COMMENT (W8), rate source (S9), CSV source (S10), typed Dataset.map
   * (T1), DfUtils/FsUtils helpers (P2/P10/P11, S14/W21). */
 class ParitySpec extends AnyFunSuite {
-  import TestSpark.spark
+  import TestSpark.{spark, tmpDir, tmpPath}
   import spark.implicits._
-
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), prefix).toString
 
   test("W8: ALTER TABLE ... ALTER COLUMN ... COMMENT round-trips") {
     spark.conf.set("spark.sql.catalog.graft", "graft.sql.GraftCatalog")
@@ -52,7 +46,7 @@ class ParitySpec extends AnyFunSuite {
   }
 
   test("S9: rate source feeds the graft streaming sink (Flink datagen shape)") {
-    val path = tmp("rate_") + "/t"
+    val path = tmpPath("rate_")
     val q = spark.readStream.format("rate")
       .option("rowsPerSecond", "500").load()
       .select(col("value").cast("int").as("user_id"),
@@ -60,7 +54,7 @@ class ParitySpec extends AnyFunSuite {
         (col("value") % 100).cast("double").as("amount"),
         col("value").as("ts"))
       .writeStream.format("graft")
-      .option("checkpointLocation", tmp("rate_ckpt_"))
+      .option("checkpointLocation", tmpDir("rate_ckpt_"))
       .option("primaryKey", "user_id").option("preCombineField", "ts")
       .start(path)
     try {
@@ -74,14 +68,14 @@ class ParitySpec extends AnyFunSuite {
   }
 
   test("S10: CSV source into a lake table (Flink CSV DDL shape)") {
-    val dir = tmp("csv_")
+    val dir = tmpDir("csv_")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, "in.csv"),
       "uuid,name,age,ts,part\nu1,n1,30,1,p1\nu2,n2,40,1,p2\nu1,n1b,31,2,p1\n")
     val df = spark.read.option("header", "true")
       .schema("uuid STRING, name STRING, age INT, ts BIGINT, part STRING")
       .csv(dir)
-    val path = tmp("csvlake_") + "/t"
+    val path = tmpPath("csvlake_")
     df.write.format("graft")
       .option("primaryKey", "uuid").option("preCombineField", "ts")
       .option("partitionFields", "part").save(path)
@@ -91,7 +85,7 @@ class ParitySpec extends AnyFunSuite {
   }
 
   test("T1: typed Dataset.map over commit listing (IncrementalQuery.scala:37)") {
-    val path = tmp("typed_") + "/t"
+    val path = tmpPath("typed_")
     val t = LakeTable.create(spark, path,
       graft.core.TableProps("t", Seq("id"), Some("ts"), Seq.empty))
     t.upsert(Seq((1, 1L)).toDF("id", "ts"))
@@ -112,7 +106,7 @@ class ParitySpec extends AnyFunSuite {
   }
 
   test("FsUtils: listDirs + deletePath") {
-    val dir = tmp("fs_")
+    val dir = tmpDir("fs_")
     new java.io.File(dir, "a").mkdirs()
     new java.io.File(dir, "b").mkdirs()
     assert(FsUtils.listDirs(spark, dir).toSet == Set("a", "b"))
@@ -153,7 +147,7 @@ class ParitySpec extends AnyFunSuite {
     // a "database directory" of path-based lake tables (the shape the
     // DataFrame API produces, invisible to any catalog), plus a
     // non-lake dir the sync must skip
-    val srcDb = tmp("syncsrc_")
+    val srcDb = tmpDir("syncsrc_")
     val t1 = LakeTable.create(spark, s"$srcDb/events",
       TableProps("events", Seq("id"), Some("ts"), Seq("dt")))
     t1.upsert(Seq((1, "a", 1L, "d1"), (2, "b", 1L, "d2")).toDF("id", "v", "ts", "dt"))
@@ -163,7 +157,7 @@ class ParitySpec extends AnyFunSuite {
     t2.upsert(Seq((1, "x2", 2L, "d1")).toDF("id", "v", "ts", "dt")) // delta
     new java.io.File(s"$srcDb/not_a_table").mkdirs()
     // the target catalog standing in for the external metastore
-    val wh = tmp("synctgt_")
+    val wh = tmpDir("synctgt_")
     spark.conf.set("spark.sql.catalog.graft_hms", "graft.sql.GraftCatalog")
     spark.conf.set("spark.sql.catalog.graft_hms.warehouse", wh)
     val r1 = CatalogSync.syncDatabase(spark, srcDb, "graft_hms", "db",
@@ -226,11 +220,11 @@ class ParitySpec extends AnyFunSuite {
 
   test("clean on a mirror never deletes the source table's files") {
     import graft.core.TableProps
-    val srcDb = tmp("syncclean_")
+    val srcDb = tmpDir("syncclean_")
     val t = LakeTable.create(spark, s"$srcDb/tbl",
       TableProps("tbl", Seq("id"), Some("ts"), Seq.empty))
     t.upsert(Seq((1, "a", 1L)).toDF("id", "v", "ts"))
-    val wh = tmp("synccleanwh_")
+    val wh = tmpDir("synccleanwh_")
     graft.sql.CatalogSync.syncTable(spark, s"$srcDb/tbl", s"$wh/db/tbl")
     val mirror = LakeTable.load(spark, s"$wh/db/tbl")
     // upserting the mirror rewrites the pointer entry into a LOCAL

@@ -10,7 +10,7 @@ import graft.util.Tables
 /** Specs for the LLM-data pipeline operators (dedup / similarity /
   * multimodal) beyond what the DuckDB oracles check. */
 class PipelineOpsSpec extends AnyFunSuite {
-  import TestSpark.{sf, spark}
+  import TestSpark.{sf, spark, tmpDir}
 
   test("dedup: injected exact and near duplicates are found") {
     val exact = SparkEntry.queries("dedup1_exact")(spark, sf)
@@ -58,8 +58,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     val words = (1 to 20).map(i => s"w$i")
     val base = words.mkString(" ")
     val third = (words.take(13) ++ Seq("x1", "x2", "x3")).mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("dedup6c_")
-      .toString
+    val dir = tmpDir("dedup6c_")
     Seq((1L, base, "s"), (2L, base, "s"), (3L, third, "s"))
       .toDF("doc_id", "text", "source")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -199,7 +198,7 @@ class PipelineOpsSpec extends AnyFunSuite {
 
   test("q22 funnel: steps only count when strictly in order") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_funnel").toString
+    val dir = tmpDir("graft_funnel")
     // ts written as raw nanos longs — same physical shape Tables.events
     // normalizes (nanosAsLong), so the query-under-test reads it as the
     // real file. user 1 completes; user 2's clicks precede its first

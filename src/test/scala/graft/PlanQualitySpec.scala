@@ -10,7 +10,7 @@ import graft.core.{LakeTable, TableProps}
   * column pruning, broadcast for small dims, whole-stage codegen.
   * These lock in plan shape so a refactor can't silently regress them. */
 class PlanQualitySpec extends AnyFunSuite {
-  import TestSpark.spark
+  import TestSpark.{spark, tmpPath}
   import spark.implicits._
 
   private val sf = "/root/testdata/sf0.001"
@@ -192,8 +192,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("cdc: the candidate-key exchange is computed once and reused") {
-    val path = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "plan_cdc_").toString + "/t"
+    val path = tmpPath("plan_cdc_")
     val t = LakeTable.create(spark, path, TableProps(
       "plan_cdc", Seq("id"), Some("ts"), Seq("dt")))
     val c1 = t.upsert(Seq((1, "a", 1L, "d1"), (2, "b", 1L, "d1"))

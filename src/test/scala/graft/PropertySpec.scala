@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -19,12 +17,8 @@ class PropertySpec extends AnyFunSuite {
   private def samples[A](g: Gen[A], n: Int): Seq[A] =
     (1 to n).map(i => g.pureApply(Gen.Parameters.default, Seed(42L + i)))
 
-  import TestSpark.spark
+  import TestSpark.{spark, tmpPath}
   import spark.implicits._
-
-  private def tmp(): String =
-    Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "prop_").toString + "/t"
 
   private def props(hive: Boolean = true) = TableProps(
     "prop", Seq("id"), Some("ts"), Seq("dt"), hiveStylePartitioning = hive)
@@ -41,8 +35,8 @@ class PropertySpec extends AnyFunSuite {
   test("upsert is idempotent: applying the same batch twice ≡ once") {
     samples(batchGen, 3).foreach { rows =>
       if (rows.nonEmpty) {
-        val t1 = LakeTable.create(spark, tmp(), props())
-        val t2 = LakeTable.create(spark, tmp(), props())
+        val t1 = LakeTable.create(spark, tmpPath("prop_"), props())
+        val t2 = LakeTable.create(spark, tmpPath("prop_"), props())
         val df = rows.toDF("id", "v", "ts", "dt")
         t1.upsert(df)
         t2.upsert(df); t2.upsert(df)
@@ -55,7 +49,7 @@ class PropertySpec extends AnyFunSuite {
 
   test("snapshot ≡ fold of batches over an in-memory model") {
     samples(Gen.listOfN(3, batchGen), 3).foreach { batches =>
-      val t = LakeTable.create(spark, tmp(), props())
+      val t = LakeTable.create(spark, tmpPath("prop_"), props())
       // model: (key, partition) -> (v, ts); larger ts wins, incoming
       // wins ties — LatestByOrdering
       var model = Map.empty[(Int, String), (String, Long)]
@@ -122,9 +116,9 @@ class PropertySpec extends AnyFunSuite {
             rows.foreach(r => model -= ((r._1, r._4)))
         }
         spark.conf.unset("spark.graft.probe.driverKeyCap")
-        val viaFooter = replay(ops, tmp())
+        val viaFooter = replay(ops, tmpPath("prop_"))
         spark.conf.set("spark.graft.probe.driverKeyCap", "0")
-        val viaScan = replay(ops, tmp())
+        val viaScan = replay(ops, tmpPath("prop_"))
         assert(viaFooter == viaScan,
           s"footer vs scan probe diverged:\n$viaFooter\n$viaScan")
         assert(viaFooter == model,
@@ -137,7 +131,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("delete after insert round-trips to absence") {
-    val t = LakeTable.create(spark, tmp(), props())
+    val t = LakeTable.create(spark, tmpPath("prop_"), props())
     val rows = Seq((1, "a", 1L, "d1"), (2, "b", 1L, "d2"))
     t.upsert(rows.toDF("id", "v", "ts", "dt"))
     t.delete(rows.map(r => (r._1, r._4)).toDF("id", "dt"))
@@ -174,10 +168,10 @@ class PropertySpec extends AnyFunSuite {
     } yield (isDelete, docs.distinctBy(_._1))
 
     for (tableType <- Seq("cow", "mor")) {
-      val docsPath = tmp()
-      val sigPath = tmp()
-      val pairsPath = tmp()
-      val ckpt = tmp()
+      val docsPath = tmpPath("prop_")
+      val sigPath = tmpPath("prop_")
+      val pairsPath = tmpPath("prop_")
+      val ckpt = tmpPath("prop_")
       val docs = LakeTable.create(spark, docsPath, TableProps(
         "pnddocs", Seq("doc_id"), Some("ts"), Seq.empty))
       LakeTable.create(spark, sigPath, TableProps(
@@ -314,10 +308,10 @@ class PropertySpec extends AnyFunSuite {
     } yield (isDelete, docs.distinctBy(_._1))
 
     for (tableType <- Seq("cow", "mor")) {
-      val sigs = LakeTable.create(spark, tmp(), TableProps(
+      val sigs = LakeTable.create(spark, tmpPath("prop_"), TableProps(
         "ppsigs", Seq("doc_id"), Some("ts"), Seq.empty,
         tableType = tableType))
-      val pairs = LakeTable.create(spark, tmp(), TableProps(
+      val pairs = LakeTable.create(spark, tmpPath("prop_"), TableProps(
         "pppairs", Seq("a", "b"), Some("ts"), Seq.empty,
         tableType = tableType))
       // in-memory corpus model: id → current image bytes
@@ -400,10 +394,10 @@ class PropertySpec extends AnyFunSuite {
     } yield (isDelete, docs.distinctBy(_._1))
 
     for (tableType <- Seq("cow", "mor")) {
-      val sigs = LakeTable.create(spark, tmp(), TableProps(
+      val sigs = LakeTable.create(spark, tmpPath("prop_"), TableProps(
         "pasigs", Seq("doc_id"), Some("ts"), Seq.empty,
         tableType = tableType))
-      val pairs = LakeTable.create(spark, tmp(), TableProps(
+      val pairs = LakeTable.create(spark, tmpPath("prop_"), TableProps(
         "papairs", Seq("a", "b"), Some("ts"), Seq.empty,
         tableType = tableType))
       val corpus = scala.collection.mutable.Map.empty[Long, Array[Byte]]
@@ -506,10 +500,10 @@ class PropertySpec extends AnyFunSuite {
     } yield (isDelete, docs.distinctBy(_._1))
 
     for (tableType <- Seq("cow", "mor")) {
-      val sigs = LakeTable.create(spark, tmp(), TableProps(
+      val sigs = LakeTable.create(spark, tmpPath("prop_"), TableProps(
         "pvsigs", Seq("doc_id"), Some("ts"), Seq.empty,
         tableType = tableType))
-      val pairs = LakeTable.create(spark, tmp(), TableProps(
+      val pairs = LakeTable.create(spark, tmpPath("prop_"), TableProps(
         "pvpairs", Seq("a", "b"), Some("ts"), Seq.empty,
         tableType = tableType))
       val corpus = scala.collection.mutable.Map.empty[Long, Array[Byte]]
@@ -573,13 +567,13 @@ class PropertySpec extends AnyFunSuite {
     } yield (isDelete, docs.distinctBy(_._1))
 
     for (tableType <- Seq("cow", "mor")) {
-      val post = LakeTable.create(spark, tmp(), TableProps(
+      val post = LakeTable.create(spark, tmpPath("prop_"), TableProps(
         "p6post", Seq("doc_id", "term"), Some("ts"), Seq.empty,
         tableType = tableType))
-      val stats = LakeTable.create(spark, tmp(), TableProps(
+      val stats = LakeTable.create(spark, tmpPath("prop_"), TableProps(
         "p6stats", Seq("term"), Some("ts"), Seq.empty,
         tableType = tableType))
-      val totals = LakeTable.create(spark, tmp(), TableProps(
+      val totals = LakeTable.create(spark, tmpPath("prop_"), TableProps(
         "p6tot", Seq("id"), Some("ts"), Seq.empty, tableType = tableType))
       var model = Map.empty[Long, String]
       samples(Gen.listOfN(6, opGen), 1).foreach { ops =>
@@ -671,7 +665,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("raw (non-hive) partition layout: dirs are bare values") {
-    val path = tmp()
+    val path = tmpPath("prop_")
     val t = LakeTable.create(spark, path, props(hive = false))
     t.upsert(Seq((1, "a", 1L, "2022-10-08"), (2, "b", 1L, "2022-10-09"))
       .toDF("id", "v", "ts", "dt"))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,15 +12,11 @@ import graft.queries.{MultimodalOps, NearDupIndex}
   * entries. Checked on the session's CacheManager directly, without
   * the `clearCache()` the Bench and Verify harnesses run per query. */
 class ReconcileLifecycleSpec extends AnyFunSuite {
-  import TestSpark.spark
+  import TestSpark.{spark, tmpPath}
   import spark.implicits._
 
-  private def tmp(p: String): String =
-    Files.createTempDirectory(java.nio.file.Paths.get("target"), p)
-      .toString + "/t"
-
   private def mor(name: String, key: Seq[String], stats: Seq[String]) =
-    LakeTable.create(spark, tmp(name + "_"), TableProps(
+    LakeTable.create(spark, tmpPath(name + "_"), TableProps(
       name, key, Some("ts"), Seq.empty, tableType = "mor",
       statsColumns = stats))
 

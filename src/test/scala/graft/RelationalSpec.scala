@@ -17,6 +17,27 @@ object TestSpark {
     .config("spark.hadoop.fs.file.impl", "graft.core.BareLocalFileSystem")
     .getOrCreate()
   val sf: String = "/root/testdata/sf0.001"
+
+  private val tmpDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+  // after Spark's own shutdown hook (Hadoop priority 40) has stopped the
+  // context and its streaming queries, so nothing writes into a dir
+  // while it is deleted; the test JVM is forked, so its exit ends the run
+  org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+    () => tmpDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d)), 20)
+
+  /** The specs' ONE temp-dir helper: a fresh directory
+    * `target/<prefix><random>`, deleted with everything in it when the
+    * test JVM exits. */
+  def tmpDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get("target"), prefix).toFile
+    tmpDirs.add(dir)
+    dir.getPath
+  }
+
+  /** A path that does not exist yet, inside a fresh [[tmpDir]]: where a
+    * spec creates a table, a checkpoint or a write target. */
+  def tmpPath(prefix: String): String = tmpDir(prefix) + "/t"
 }
 
 class RelationalSpec extends AnyFunSuite {

@@ -8,7 +8,7 @@ import graft.core.LakeTable
 /** The SQL surface (SURVEY §2.2) driven through spark.sql against the
   * graft DSv2 catalog, plus the path-based format("graft") API. */
 class SqlSurfaceSpec extends AnyFunSuite {
-  import TestSpark.spark
+  import TestSpark.{spark, tmpDir}
   import spark.implicits._
 
   private val wh = "target/graft_warehouse_test"
@@ -411,8 +411,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
     sql(s"""INSERT INTO graft.db.sm_pay VALUES
       (1, X'${hex(img(bright = false))}', 1),
       (2, X'${hex(img(bright = true))}', 1)""")
-    val ckpt = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "sm_ckpt_").toString
+    val ckpt = tmpDir("sm_ckpt_")
     val handle = sql(s"""CALL graft.system.start_maintenance(
       family => 'media', tables => 'db.sm_pay,db.sm_sigs,db.sm_pairs',
       modality => 'image', checkpoint => '$ckpt')""").head().getString(0)
@@ -462,8 +461,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
     sql("""INSERT INTO graft.db.sm_docs VALUES
       (1, 'alpha bravo charlie delta echo foxtrot golf hotel india juliet', 1),
       (2, 'alpha bravo charlie delta echo foxtrot golf hotel india juliet extra', 1)""")
-    val ckptT = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "sm_ckpt_t_").toString
+    val ckptT = tmpDir("sm_ckpt_t_")
     sql(s"""CALL graft.system.start_maintenance(
       family => 'neardup', tables => 'db.sm_docs,db.sm_tsigs,db.sm_tpairs',
       modality => '', checkpoint => '$ckptT')""").collect()

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,16 +9,12 @@ import graft.core.{LakeTable, TableProps}
 /** Structured-streaming surface (SURVEY §2.10): streaming upsert sink
   * (ST2/ST3) and the commit-tailing streaming read (ST4/S11). */
 class StreamingSpec extends AnyFunSuite {
-  import TestSpark.spark
+  import TestSpark.{spark, tmpPath}
   import spark.implicits._
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), prefix).toString + "/t"
-
   test("streaming upsert sink: micro-batches become keyed commits") {
-    val path = tmp("stream_sink_")
-    val checkpoint = tmp("stream_ckpt_")
+    val path = tmpPath("stream_sink_")
+    val checkpoint = tmpPath("stream_ckpt_")
     implicit val sctx = spark.sqlContext
     val input = MemoryStream[(Int, String, Long)]
     val q = input.toDF().toDF("id", "v", "ts")
@@ -44,7 +38,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("sink replay after lost marker does not duplicate insert batches") {
-    val path = tmp("stream_replay_")
+    val path = tmpPath("stream_replay_")
     val ckpt = "replay-ckpt"
     val sink = new graft.sql.GraftStreamSink(spark, Map(
       "path" -> path, "operation" -> "insert",
@@ -67,7 +61,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("torn exactly-once marker reads as absent and is repaired, not a wedge") {
-    val path = tmp("stream_torn_")
+    val path = tmpPath("stream_torn_")
     val ckpt = "torn-ckpt"
     val sink = new graft.sql.GraftStreamSink(spark, Map(
       "path" -> path, "operation" -> "insert",
@@ -92,7 +86,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("sink replay is refused even after the tagged commit was archived") {
-    val path = tmp("stream_archive_replay_")
+    val path = tmpPath("stream_archive_replay_")
     val ckpt = "archive-replay-ckpt"
     val sink = new graft.sql.GraftStreamSink(spark, Map(
       "path" -> path, "operation" -> "insert",
@@ -117,8 +111,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("rate-source-style synthesized stream into the sink (ST1 shape)") {
-    val path = tmp("stream_rate_")
-    val checkpoint = tmp("stream_rate_ckpt_")
+    val path = tmpPath("stream_rate_")
+    val checkpoint = tmpPath("stream_rate_ckpt_")
     implicit val sctx = spark.sqlContext
     // bounded stand-in for the Flink datagen source: sequence ids +
     // deterministic synthesized columns (TestStreamingMOR.java:23-36)
@@ -193,7 +187,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("commit-tail stream of a MOR table drops tombstones and fences inflight writers") {
     import graft.core.{LakeTable, TableProps}
-    val path = tmp("mor_tail_") + "/t"
+    val path = tmpPath("mor_tail_") + "/t"
     val t = LakeTable.create(spark, path, TableProps(
       "mor_tail", Seq("id"), Some("ts"), Seq.empty, tableType = "mor"))
     t.upsert(Seq((1, "a", 1L), (2, "b", 1L)).toDF("id", "v", "ts"))
@@ -230,8 +224,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming CDC feed: net ops with before images arrive per micro-batch") {
-    val path = tmp("cdc_stream_")
-    val ckpt = tmp("cdc_stream_ckpt_")
+    val path = tmpPath("cdc_stream_")
+    val ckpt = tmpPath("cdc_stream_ckpt_")
     val t = LakeTable.create(spark, path, TableProps(
       "cdcs", Seq("id"), Some("ts"), Seq.empty))
     val c1 = t.upsert(Seq((1, "a", 1L), (2, "b", 1L)).toDF("id", "v", "ts"))
@@ -273,7 +267,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("cdc source: batches spanning a schema evolution conform; reversed range is empty") {
     import graft.streaming.GraftCdcSource
-    val path = tmp("cdc_evo_")
+    val path = tmpPath("cdc_evo_")
     val t = LakeTable.create(spark, path, TableProps(
       "evo", Seq("id"), Some("ts"), Seq.empty))
     val c1 = t.upsert(Seq((1, "a", 1L)).toDF("id", "v", "ts"))
@@ -300,9 +294,9 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming MV (production shape): exactly-once across kill/restart") {
     import graft.streaming.{ExactlyOnce, MvMaintenance}
-    val basePath = tmp("smv_base_")
-    val mvPath = tmp("smv_mv_")
-    val ckpt = tmp("smv_ckpt_")
+    val basePath = tmpPath("smv_base_")
+    val mvPath = tmpPath("smv_mv_")
+    val ckpt = tmpPath("smv_ckpt_")
     val t = LakeTable.create(spark, basePath, TableProps(
       "smvb", Seq("id"), Some("ts"), Seq.empty))
     LakeTable.create(spark, mvPath, TableProps(
@@ -433,7 +427,7 @@ class StreamingSpec extends AnyFunSuite {
       .as[SessionEvent](org.apache.spark.sql.Encoders.product[SessionEvent])
     val q = Sessionize.sessions(events, gapMs = 60000L) // 1 min gap
       .writeStream.format("memory").queryName("sessions_out")
-      .outputMode("append").option("checkpointLocation", tmp("sess_ckpt_")).start()
+      .outputMode("append").option("checkpointLocation", tmpPath("sess_ckpt_")).start()
     try {
       val base = 1700000000000L
       // user 1: two events 10s apart (one session); user 2: one event;
@@ -469,7 +463,7 @@ class StreamingSpec extends AnyFunSuite {
 
     val q = spark.readStream.table("graft.db.tail")
       .writeStream.format("memory").queryName("tail_out")
-      .option("checkpointLocation", tmp("tail_ckpt_"))
+      .option("checkpointLocation", tmpPath("tail_ckpt_"))
       .start()
     try {
       q.processAllAvailable()
@@ -489,11 +483,11 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming search-index maintenance: kill/restart converges to batch answer") {
     import graft.streaming.SearchIndexMaintenance
     import graft.queries.SearchIndex
-    val docsPath = tmp("six_docs_")
-    val postPath = tmp("six_post_")
-    val statsPath = tmp("six_stats_")
-    val totPath = tmp("six_tot_")
-    val ckpt = tmp("six_ckpt_")
+    val docsPath = tmpPath("six_docs_")
+    val postPath = tmpPath("six_post_")
+    val statsPath = tmpPath("six_stats_")
+    val totPath = tmpPath("six_tot_")
+    val ckpt = tmpPath("six_ckpt_")
     val docs = LakeTable.create(spark, docsPath, TableProps(
       "sixdocs", Seq("doc_id"), Some("ts"), Seq.empty))
     LakeTable.create(spark, postPath, TableProps(
@@ -573,6 +567,25 @@ class StreamingSpec extends AnyFunSuite {
     check("crash-window")
   }
 
+  test("search-index maintenance fails fast on a docs table without text") {
+    import graft.streaming.SearchIndexMaintenance
+    val docsPath = tmpPath("sixm_docs_")
+    def mor(prefix: String, key: Seq[String]) = LakeTable.create(spark, tmpPath(prefix),
+      TableProps(prefix, key, Some("ts"), Seq.empty, tableType = "mor")).basePath
+    val docs = LakeTable.create(spark, docsPath, TableProps(
+      "sixmdocs", Seq("doc_id"), Some("ts"), Seq.empty))
+    docs.upsert(Seq((1L, "alpha bravo alpha", 1L)).toDF("doc_id", "body", "ts"))
+    // misconfiguration fails fast at start() with the service's own
+    // message — a docs table whose text column is misnamed must not
+    // surface later as an opaque streaming analysis error inside
+    // foreachBatch
+    val e = intercept[IllegalArgumentException](SearchIndexMaintenance.start(
+      spark, docsPath, mor("sixm_post_", Seq("doc_id", "term")),
+      mor("sixm_stats_", Seq("term")), mor("sixm_tot_", Seq("id")),
+      tmpPath("sixm_ckpt_")))
+    assert(e.getMessage.contains("text"), e.getMessage)
+  }
+
   test("mid-stream schema evolution: maintained index folds on, equals batch answer") {
     // at 100 TB, producers add columns without stopping consumers:
     // the docs schema WIDENS (additive upsert, lake5
@@ -583,11 +596,11 @@ class StreamingSpec extends AnyFunSuite {
     // stay hash-equal to the batch answer over the widened corpus.
     import graft.streaming.SearchIndexMaintenance
     import graft.queries.SearchIndex
-    val docsPath = tmp("sev_docs_")
-    val postPath = tmp("sev_post_")
-    val statsPath = tmp("sev_stats_")
-    val totPath = tmp("sev_tot_")
-    val ckpt = tmp("sev_ckpt_")
+    val docsPath = tmpPath("sev_docs_")
+    val postPath = tmpPath("sev_post_")
+    val statsPath = tmpPath("sev_stats_")
+    val totPath = tmpPath("sev_tot_")
+    val ckpt = tmpPath("sev_ckpt_")
     val docs = LakeTable.create(spark, docsPath, TableProps(
       "sevdocs", Seq("doc_id"), Some("ts"), Seq.empty))
     LakeTable.create(spark, postPath, TableProps(
@@ -657,10 +670,10 @@ class StreamingSpec extends AnyFunSuite {
     // pairs table stays equal to a brute-force recompute
     import graft.queries.DedupOps
     import graft.streaming.NearDupMaintenance
-    val docsPath = tmp("sev2_docs_")
-    val sigPath = tmp("sev2_sigs_")
-    val pairsPath = tmp("sev2_pairs_")
-    val ckpt = tmp("sev2_ckpt_")
+    val docsPath = tmpPath("sev2_docs_")
+    val sigPath = tmpPath("sev2_sigs_")
+    val pairsPath = tmpPath("sev2_pairs_")
+    val ckpt = tmpPath("sev2_ckpt_")
     val docs = LakeTable.create(spark, docsPath, TableProps(
       "sev2docs", Seq("doc_id"), Some("ts"), Seq.empty))
     LakeTable.create(spark, sigPath, TableProps(
@@ -712,11 +725,11 @@ class StreamingSpec extends AnyFunSuite {
 
   test("clusterEvery folds the service's delta tails without changing state") {
     import graft.streaming.NearDupMaintenance
-    val docsPath = tmp("sfo_docs_")
-    val sigPath = tmp("sfo_sigs_")
-    val pairsPath = tmp("sfo_pairs_")
-    val postPath = tmp("sfo_post_")
-    val ckpt = tmp("sfo_ckpt_")
+    val docsPath = tmpPath("sfo_docs_")
+    val sigPath = tmpPath("sfo_sigs_")
+    val pairsPath = tmpPath("sfo_pairs_")
+    val postPath = tmpPath("sfo_post_")
+    val ckpt = tmpPath("sfo_ckpt_")
     val docs = LakeTable.create(spark, docsPath, TableProps(
       "sfodocs", Seq("doc_id"), Some("ts"), Seq.empty))
     LakeTable.create(spark, sigPath, TableProps(
@@ -756,10 +769,10 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming near-dup maintenance: kill/restart converges to batch answer") {
     import graft.streaming.{ExactlyOnce, NearDupMaintenance}
     import graft.queries.DedupOps
-    val docsPath = tmp("snd_docs_")
-    val sigPath = tmp("snd_sigs_")
-    val pairsPath = tmp("snd_pairs_")
-    val ckpt = tmp("snd_ckpt_")
+    val docsPath = tmpPath("snd_docs_")
+    val sigPath = tmpPath("snd_sigs_")
+    val pairsPath = tmpPath("snd_pairs_")
+    val ckpt = tmpPath("snd_ckpt_")
     val docs = LakeTable.create(spark, docsPath, TableProps(
       "snddocs", Seq("doc_id"), Some("ts"), Seq.empty))
     LakeTable.create(spark, sigPath, TableProps(
@@ -845,10 +858,10 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming media-index maintenance: kill/restart converges; crash-window skips") {
     import graft.streaming.{ExactlyOnce, SignatureMaintenance}
     import graft.multimodal.MediaDecoder
-    val payPath = tmp("smi_pay_")
-    val sigPath = tmp("smi_sigs_")
-    val pairsPath = tmp("smi_pairs_")
-    val ckpt = tmp("smi_ckpt_")
+    val payPath = tmpPath("smi_pay_")
+    val sigPath = tmpPath("smi_sigs_")
+    val pairsPath = tmpPath("smi_pairs_")
+    val ckpt = tmpPath("smi_ckpt_")
     val pay = LakeTable.create(spark, payPath, TableProps(
       "smipay", Seq("doc_id"), Some("ts"), Seq.empty))
     LakeTable.create(spark, sigPath, TableProps(
@@ -937,7 +950,7 @@ class StreamingSpec extends AnyFunSuite {
       s"decode_stats last row: $last")
     // empty/missing sidecar → zero rows, not an error
     assert(spark.sql(
-      s"CALL graft.system.decode_stats(checkpoint => '${tmp("smi_nock_")}')")
+      s"CALL graft.system.decode_stats(checkpoint => '${tmpPath("smi_nock_")}')")
       .isEmpty)
     // phase 4: crash-window replay — the tagged pairs commit landed
     // but the sidecar marker write was lost; the commit-tag safety
@@ -956,7 +969,7 @@ class StreamingSpec extends AnyFunSuite {
     // message — a misnamed payload column must not surface later as
     // an opaque streaming analysis error inside foreachBatch
     val e = intercept[IllegalArgumentException](SignatureMaintenance.start(
-      spark, payPath, sigPath, pairsPath, tmp("smi_ckpt2_"),
+      spark, payPath, sigPath, pairsPath, tmpPath("smi_ckpt2_"),
       payloadCol = "no_such_col"))
     assert(e.getMessage.contains("no_such_col"), e.getMessage)
   }
@@ -972,10 +985,10 @@ class StreamingSpec extends AnyFunSuite {
       StructField, StructType}
     import org.apache.spark.sql.util.CaseInsensitiveStringMap
     import graft.streaming.{CommitOffset, CommitTailStream}
-    val srcDir = tmp("boot_src_")
+    val srcDir = tmpPath("boot_src_")
     Seq((1, "a", 1L), (2, "b", 1L)).toDF("id", "v", "ts")
       .write.parquet(srcDir)
-    val t = LakeTable.bootstrapMetadata(spark, tmp("boot_tail_"), srcDir,
+    val t = LakeTable.bootstrapMetadata(spark, tmpPath("boot_tail_"), srcDir,
       TableProps("boottail", Seq("id"), Some("ts"), Seq.empty))
     val boot = t.timeline.commits().head.instant
     // output schema REQUESTS _commit_time: adopted rows must carry the
@@ -1021,9 +1034,9 @@ class StreamingSpec extends AnyFunSuite {
 
   test("near-dup reconcile: sigs-committed/pairs-uncommitted replay converges") {
     import graft.queries.NearDupIndex
-    val sigs = LakeTable.create(spark, tmp("cw_sigs_"), TableProps(
+    val sigs = LakeTable.create(spark, tmpPath("cw_sigs_"), TableProps(
       "sigs", Seq("doc_id"), Some("ts"), Seq.empty, tableType = "mor"))
-    val pairs = LakeTable.create(spark, tmp("cw_pairs_"), TableProps(
+    val pairs = LakeTable.create(spark, tmpPath("cw_pairs_"), TableProps(
       "pairs", Seq("a", "b"), Some("ts"), Seq.empty, tableType = "mor"))
     val g = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
     val h = "kilo lima mike november oscar papa quebec romeo sierra tango"
@@ -1059,9 +1072,9 @@ class StreamingSpec extends AnyFunSuite {
 
   test("phash reconcile: sigs-committed/pairs-uncommitted replay converges") {
     import graft.queries.MultimodalOps
-    val sigs = LakeTable.create(spark, tmp("cwm_sigs_"), TableProps(
+    val sigs = LakeTable.create(spark, tmpPath("cwm_sigs_"), TableProps(
       "sigs", Seq("doc_id"), Some("ts"), Seq.empty, tableType = "mor"))
-    val pairs = LakeTable.create(spark, tmp("cwm_pairs_"), TableProps(
+    val pairs = LakeTable.create(spark, tmpPath("cwm_pairs_"), TableProps(
       "pairs", Seq("a", "b"), Some("ts"), Seq.empty, tableType = "mor"))
     // byte-equal payloads ⇒ identical signatures; distinct payloads get
     // (near-surely) far-apart 64-bit hashes, so only star edges form
@@ -1092,10 +1105,10 @@ class StreamingSpec extends AnyFunSuite {
   test("clustered signature stores: churn batches skip files and stay exact") {
     import graft.queries.{MultimodalOps, NearDupIndex}
     // ---- text: store clustered by fp, churn touches 2 of 10 groups
-    val sigsT = LakeTable.create(spark, tmp("fsk_tsigs_"), TableProps(
+    val sigsT = LakeTable.create(spark, tmpPath("fsk_tsigs_"), TableProps(
       "sigs", Seq("doc_id"), Some("ts"), Seq.empty, tableType = "mor",
       statsColumns = Seq("fp", "ts")))
-    val pairsT = LakeTable.create(spark, tmp("fsk_tpairs_"), TableProps(
+    val pairsT = LakeTable.create(spark, tmpPath("fsk_tpairs_"), TableProps(
       "pairs", Seq("a", "b"), Some("ts"), Seq.empty, tableType = "mor"))
     def gText(g: Int) = (0 until 10)
       .map(j => s"w${g}word$j token$j alpha$g").mkString(" ")
@@ -1123,10 +1136,10 @@ class StreamingSpec extends AnyFunSuite {
     assert(gotT == wantT, s"pruned churn must stay exact: $gotT vs $wantT")
 
     // ---- media: store clustered by (hash_hi, hash_lo)
-    val sigsM = LakeTable.create(spark, tmp("fsk_msigs_"), TableProps(
+    val sigsM = LakeTable.create(spark, tmpPath("fsk_msigs_"), TableProps(
       "sigs", Seq("doc_id"), Some("ts"), Seq.empty, tableType = "mor",
       statsColumns = Seq("hash_hi", "hash_lo", "ts")))
-    val pairsM = LakeTable.create(spark, tmp("fsk_mpairs_"), TableProps(
+    val pairsM = LakeTable.create(spark, tmpPath("fsk_mpairs_"), TableProps(
       "pairs", Seq("a", "b"), Some("ts"), Seq.empty, tableType = "mor"))
     val byteHash = (df: org.apache.spark.sql.DataFrame) => df.select(
       col("doc_id"), xxhash64(col("payload")).as("hash_hi"),
@@ -1151,7 +1164,7 @@ class StreamingSpec extends AnyFunSuite {
   test("text posting index: probe-from-postings pairs equal the full rep-scan pairs") {
     import graft.queries.NearDupIndex
     def mk(prefix: String, pk: Seq[String], stats: Seq[String]) =
-      LakeTable.create(spark, tmp(prefix), TableProps(
+      LakeTable.create(spark, tmpPath(prefix), TableProps(
         prefix, pk, Some("ts"), Seq.empty, tableType = "mor",
         statsColumns = stats))
     val sigsA = mk("peq_sa_", Seq("doc_id"), Seq("fp", "ts"))
@@ -1213,7 +1226,7 @@ class StreamingSpec extends AnyFunSuite {
   test("media posting index: probe-from-postings pairs equal the full rep-scan pairs") {
     import graft.queries.MultimodalOps
     def mk(prefix: String, pk: Seq[String], stats: Seq[String]) =
-      LakeTable.create(spark, tmp(prefix), TableProps(
+      LakeTable.create(spark, tmpPath(prefix), TableProps(
         prefix, pk, Some("ts"), Seq.empty, tableType = "mor",
         statsColumns = stats))
     val sigsA = mk("meq_sa_", Seq("doc_id"), Seq("hash_hi", "hash_lo", "ts"))
@@ -1278,7 +1291,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("decode-census sidecar: rotation bounds the active segment; crash windows lose nothing") {
     import graft.streaming.SignatureMaintenance
-    val ckpt = tmp("census_rot_")
+    val ckpt = tmpPath("census_rot_")
     val fs = new org.apache.hadoop.fs.Path(ckpt)
       .getFileSystem(spark.sessionState.newHadoopConf())
     fs.mkdirs(new org.apache.hadoop.fs.Path(ckpt))
@@ -1325,9 +1338,9 @@ class StreamingSpec extends AnyFunSuite {
 
   test("phash reconcile: NULL-hash rows drop out instead of collapsing into one group") {
     import graft.queries.MultimodalOps
-    val sigs = LakeTable.create(spark, tmp("nh_sigs_"), TableProps(
+    val sigs = LakeTable.create(spark, tmpPath("nh_sigs_"), TableProps(
       "sigs", Seq("doc_id"), Some("ts"), Seq.empty, tableType = "mor"))
-    val pairs = LakeTable.create(spark, tmp("nh_pairs_"), TableProps(
+    val pairs = LakeTable.create(spark, tmpPath("nh_pairs_"), TableProps(
       "pairs", Seq("a", "b"), Some("ts"), Seq.empty, tableType = "mor"))
     // a hashFn variant that EMITS a row with NULL halves for tiny
     // payloads (instead of the documented emit-no-row contract): the

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,12 +8,8 @@ import graft.core._
 /** Table services (SURVEY §7.7): clean, archive, and the key-range
   * candidate index. */
 class TableServicesSpec extends AnyFunSuite {
-  import TestSpark.spark
+  import TestSpark.{spark, tmpDir, tmpPath}
   import spark.implicits._
-
-  private def tmp(): String =
-    Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "svc_").toString + "/t"
 
   private def props = TableProps("svc", Seq("id"), Some("ts"), Seq("dt"))
 
@@ -52,7 +46,7 @@ class TableServicesSpec extends AnyFunSuite {
   }
 
   test("inflight fence heartbeat outlives the stale window; expiry is only for dead writers") {
-    val path = tmp()
+    val path = tmpPath("svc_")
     LakeTable.create(spark, path, props)
     val conf = spark.sessionState.newHadoopConf()
     // generous window: the assertion below poll-waits for an actual
@@ -90,7 +84,7 @@ class TableServicesSpec extends AnyFunSuite {
   }
 
   test("a failed write clears its inflight fence (no immortal heartbeat)") {
-    val path = tmp()
+    val path = tmpPath("svc_")
     val t = LakeTable.create(spark, path, props)
     t.upsert(mkDf(row(1, "a")))
     // a batch whose write JOB fails mid-flight: key column missing
@@ -106,7 +100,7 @@ class TableServicesSpec extends AnyFunSuite {
   }
 
   test("commits record per-file record-key bounds from footers") {
-    val t = LakeTable.create(spark, tmp(), props)
+    val t = LakeTable.create(spark, tmpPath("svc_"), props)
     t.upsert(mkDf(row(1, "a"), row(5, "b"), row(9, "c")))
     val c = t.timeline.commits().head
     val bounds = c.keyBounds.get.values.toSeq
@@ -117,7 +111,7 @@ class TableServicesSpec extends AnyFunSuite {
   }
 
   test("key-range pruning: disjoint-key upsert rewrites no files") {
-    val t = LakeTable.create(spark, tmp(), props)
+    val t = LakeTable.create(spark, tmpPath("svc_"), props)
     t.upsert(mkDf((100 to 150).map(i => row(i, s"v$i")): _*))
     // keys 900.. are outside [100,150] lexicographically? use same-width
     val c2 = t.upsert(mkDf((300 to 320).map(i => row(i, s"w$i")): _*))
@@ -149,9 +143,9 @@ class TableServicesSpec extends AnyFunSuite {
     }
     try {
       spark.conf.unset("spark.graft.probe.driverKeyCap")
-      val footer = scenario(tmp())
+      val footer = scenario(tmpPath("svc_"))
       spark.conf.set("spark.graft.probe.driverKeyCap", "0")
-      val scan = scenario(tmp())
+      val scan = scenario(tmpPath("svc_"))
       assert(footer.map(_._1) == scan.map(_._1))
       footer.zip(scan).foreach { case ((act, fRem), (_, sRem)) =>
         // compare by file COUNT, not names (names embed instants):
@@ -166,7 +160,7 @@ class TableServicesSpec extends AnyFunSuite {
   }
 
   test("writeSaltBuckets spreads a hot partition across files") {
-    val t = LakeTable.create(spark, tmp(), props.copy(writeSaltBuckets = 4))
+    val t = LakeTable.create(spark, tmpPath("svc_"), props.copy(writeSaltBuckets = 4))
     t.upsert(mkDf((1 to 400).map(i => row(i, s"v$i")): _*))
     val files = t.timeline.commits().head.added
     assert(files.size >= 3, s"expected salted spread, got ${files.size} file(s)")
@@ -174,7 +168,7 @@ class TableServicesSpec extends AnyFunSuite {
   }
 
   test("single-writer: conflicting commit on the same instant fails atomically") {
-    val path = tmp()
+    val path = tmpPath("svc_")
     val t = LakeTable.create(spark, path, props)
     t.upsert(mkDf(row(1, "a")))
     val existing = t.timeline.commits().head
@@ -186,7 +180,7 @@ class TableServicesSpec extends AnyFunSuite {
   }
 
   test("clean deletes replaced file versions beyond retention") {
-    val path = tmp()
+    val path = tmpPath("svc_")
     val t = LakeTable.create(spark, path, props)
     t.upsert(mkDf(row(1, "a")))
     t.upsert(mkDf(row(1, "b", ts = 2)))
@@ -205,7 +199,7 @@ class TableServicesSpec extends AnyFunSuite {
   }
 
   test("savepoint pins a snapshot through clean and archive; release frees it") {
-    val path = tmp()
+    val path = tmpPath("svc_")
     val t = LakeTable.create(spark, path, props)
     t.upsert(mkDf(row(1, "a")))
     val sp = t.upsert(mkDf(row(1, "b", ts = 2)))
@@ -263,7 +257,7 @@ class TableServicesSpec extends AnyFunSuite {
   }
 
   test("clean_orphans removes crashed-writer leftovers, never live or fresh data") {
-    val path = tmp()
+    val path = tmpPath("svc_")
     val t = LakeTable.create(spark, path, props)
     t.upsert(mkDf(row(1, "a"), row(2, "b")))
     val partDir = new java.io.File(path, "dt=d1")
@@ -292,7 +286,7 @@ class TableServicesSpec extends AnyFunSuite {
   }
 
   test("savepoint refuses an instant whose snapshot was already cleaned") {
-    val t = LakeTable.create(spark, tmp(), props)
+    val t = LakeTable.create(spark, tmpPath("svc_"), props)
     t.upsert(mkDf(row(1, "a")))
     val sp = t.upsert(mkDf(row(1, "b", ts = 2)))
     t.upsert(mkDf(row(1, "c", ts = 3)))
@@ -309,7 +303,7 @@ class TableServicesSpec extends AnyFunSuite {
   }
 
   test("clean_orphans never reaps files younger than a live writer's start") {
-    val path = tmp()
+    val path = tmpPath("svc_")
     val t = LakeTable.create(spark, path, props)
     t.upsert(mkDf(row(1, "a")))
     val partDir = new java.io.File(path, "dt=d1")
@@ -332,7 +326,7 @@ class TableServicesSpec extends AnyFunSuite {
   }
 
   test("cdc source never offers a regressed offset after a late inflight fence") {
-    val path = tmp()
+    val path = tmpPath("svc_")
     val t = LakeTable.create(spark, path, props)
     val c0 = t.upsert(mkDf(row(1, "a")))
     val src = new graft.streaming.GraftCdcSource(spark, t, c0)
@@ -357,7 +351,7 @@ class TableServicesSpec extends AnyFunSuite {
   }
 
   test("archive folds old commits into a checkpoint; reads stay correct") {
-    val t = LakeTable.create(spark, tmp(), props)
+    val t = LakeTable.create(spark, tmpPath("svc_"), props)
     val instants = (1 to 6).map(i => t.upsert(mkDf(row(i, s"v$i", dt = s"d${i % 2}"))))
     assert(t.timeline.commits().size == 6)
     val archived = t.archive(minToKeep = 2, maxToKeep = 4)
@@ -386,7 +380,7 @@ class TableServicesSpec extends AnyFunSuite {
     // bounded regardless of table age
     import org.apache.hadoop.conf.Configuration
     import graft.core.{CommitMeta, Timeline}
-    val dir = tmp()
+    val dir = tmpPath("svc_")
     val tl = new Timeline(
       new Configuration(), dir)
     tl.writeProps(graft.core.TableProps(
@@ -431,7 +425,7 @@ class TableServicesSpec extends AnyFunSuite {
     // writer stand-in — archiving more commits replaces the file, and
     // the first instance's cached parse must invalidate, not serve
     // the stale (smaller) live-file set
-    val t = LakeTable.create(spark, tmp(), props)
+    val t = LakeTable.create(spark, tmpPath("svc_"), props)
     (1 to 6).foreach(i => t.upsert(mkDf(row(i, s"v$i", dt = s"d${i % 2}"))))
     assert(t.archive(minToKeep = 4, maxToKeep = 4) == 2)
     // prime the first instance's cache
@@ -456,7 +450,7 @@ class TableServicesSpec extends AnyFunSuite {
     // increasing asOf boundary) must catch it — including for a cache
     // entry CREATED between the two rewrites, which stays
     // head-verified until a check happens past the tick window.
-    val path = tmp()
+    val path = tmpPath("svc_")
     LakeTable.create(spark, path, props)
     val conf = spark.sessionState.newHadoopConf()
     val tl = new Timeline(conf, path)
@@ -509,11 +503,10 @@ class TableServicesSpec extends AnyFunSuite {
     // sub-millisecond commit turnaround forces both processes onto
     // the same candidate name — the marker claim is what keeps that
     // from becoming a retry).
-    val path = tmp()
+    val path = tmpPath("svc_")
     LakeTable.create(spark, path, props)
       .upsert(mkDf(row(900001, "seed", dt = "dA"), row(900002, "seed", dt = "dB")))
-    val syncDir = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "occsync_").toFile
+    val syncDir = new java.io.File(tmpDir("occsync_"))
     val nCommits = 8; val rowsPer = 5
     val out = new java.io.File(syncDir, "child.out")
     val proc = spawnOccJvm("3g", out, Seq(path, "2", nCommits.toString,
@@ -592,7 +585,7 @@ class TableServicesSpec extends AnyFunSuite {
     // create(overwrite=false) is a non-atomic exists-then-create, so
     // without the O_EXCL claim (Timeline.exclusiveCreate) both
     // processes "win" the same name and the sets intersect.
-    val path = tmp()
+    val path = tmpPath("svc_")
     LakeTable.create(spark, path, props)
     val count = 400
     // One race attempt: spawn a fresh child, rendezvous at a shared
@@ -609,8 +602,7 @@ class TableServicesSpec extends AnyFunSuite {
     // and land entirely past the winner's window (observed in CI)
     // while the race was maximally contested the whole time.
     def race(attempt: Int): (Long, Long, Long) = {
-      val syncDir = Files.createTempDirectory(
-        java.nio.file.Paths.get("target"), s"occmrk${attempt}_").toFile
+      val syncDir = new java.io.File(tmpDir(s"occmrk${attempt}_"))
       val out = new java.io.File(syncDir, "child.out")
       val proc = spawnOccJvm("512m", out, Seq("markers", path, "2",
         count.toString, syncDir.getPath))
@@ -718,12 +710,12 @@ class TableServicesSpec extends AnyFunSuite {
     val hashFn = (df: org.apache.spark.sql.DataFrame) =>
       MediaDecoder.aHash(df, "doc_id", "payload")
     for (tableType <- Seq("cow", "mor")) {
-      val pay = LakeTable.create(spark, tmp(), TableProps(
+      val pay = LakeTable.create(spark, tmpPath("svc_"), TableProps(
         "svcpay", Seq("doc_id"), Some("ts"), Seq.empty,
         tableType = tableType))
-      val sigs = LakeTable.create(spark, tmp(), TableProps(
+      val sigs = LakeTable.create(spark, tmpPath("svc_"), TableProps(
         "svcsigs", Seq("doc_id"), Some("ts"), Seq.empty, tableType = "mor"))
-      val pairs = LakeTable.create(spark, tmp(), TableProps(
+      val pairs = LakeTable.create(spark, tmpPath("svc_"), TableProps(
         "svcpairs", Seq("a", "b"), Some("ts"), Seq.empty, tableType = "mor"))
       val corpus = scala.collection.mutable.Map.empty[Long, Array[Byte]]
       def check(label: String): Unit = {
@@ -796,7 +788,7 @@ class TableServicesSpec extends AnyFunSuite {
     // entry at creation and serve a same-tick equal-length rewrite
     // stale; trust must come only from reader-time aging, so within
     // the entry's first 2 s every hit re-verifies the head.
-    val path = tmp()
+    val path = tmpPath("svc_")
     LakeTable.create(spark, path, props)
     val conf = spark.sessionState.newHadoopConf()
     val tl = new Timeline(conf, path)
@@ -820,7 +812,7 @@ class TableServicesSpec extends AnyFunSuite {
   }
 
   test("bucket index: files are bucketed and DML touches only the key's bucket") {
-    val t = LakeTable.create(spark, tmp(),
+    val t = LakeTable.create(spark, tmpPath("svc_"),
       props.copy(writeSaltBuckets = 1, bucketIndexBuckets = 4))
     t.upsert(mkDf((1 to 400).map(i => row(i, s"v$i", dt = s"d${i % 2}")): _*))
     val c1 = t.timeline.commits().head
@@ -846,7 +838,7 @@ class TableServicesSpec extends AnyFunSuite {
   }
 
   test("OCC: commit removing a concurrently-rewritten file is rejected") {
-    val t = LakeTable.create(spark, tmp(), props)
+    val t = LakeTable.create(spark, tmpPath("svc_"), props)
     t.upsert(mkDf(row(1, "a"), row(2, "b")))
     val f1 = t.timeline.liveFiles(None).head.path
     // concurrent writer rewrites f1
@@ -864,7 +856,7 @@ class TableServicesSpec extends AnyFunSuite {
   }
 
   test("OCC: concurrent withOcc upserts all land and merge correctly") {
-    val t = LakeTable.create(spark, tmp(), props)
+    val t = LakeTable.create(spark, tmpPath("svc_"), props)
     t.upsert(mkDf((1 to 100).map(i => row(i, "v0")): _*))
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration._
@@ -893,7 +885,7 @@ class TableServicesSpec extends AnyFunSuite {
     // the cross-process arbitration paths (create-no-overwrite commit
     // rename, writer-token file names, shared .staging root) carry the
     // whole load — the shape a real multi-process deployment exercises.
-    val path = tmp()
+    val path = tmpPath("svc_")
     LakeTable.create(spark, path, props)
       .upsert(mkDf((1 to 100).map(i => row(i, "v0")): _*))
     import scala.concurrent.{Await, ExecutionContext, Future}
@@ -917,7 +909,7 @@ class TableServicesSpec extends AnyFunSuite {
   }
 
   test("archive keeps files removed only by later ACTIVE commits") {
-    val t = LakeTable.create(spark, tmp(), props)
+    val t = LakeTable.create(spark, tmpPath("svc_"), props)
     t.upsert(mkDf(row(1, "a")))
     (2 to 4).foreach(i => t.upsert(mkDf(row(i, s"v$i"))))
     // active commit that rewrites (removes) the file c1 added
@@ -969,7 +961,7 @@ class TableServicesSpec extends AnyFunSuite {
       // the probe resolves from parquet footers and never plans the
       // semi-join whose broadcast gating this test pins
       spark.conf.set("spark.graft.probe.driverKeyCap", "0")
-      val t = LakeTable.create(spark, tmp(), props)
+      val t = LakeTable.create(spark, tmpPath("svc_"), props)
       t.upsert(mkDf(row(1, "a"), row(2, "b"), row(3, "c")))
 
       // batch above the gate: probe semi-join must NOT broadcast
@@ -1000,7 +992,7 @@ class TableServicesSpec extends AnyFunSuite {
   }
 
   test("clean deletes files replaced by since-archived commits") {
-    val t = LakeTable.create(spark, tmp(), props)
+    val t = LakeTable.create(spark, tmpPath("svc_"), props)
     t.upsert(mkDf(row(1, "a"), row(2, "b")))
     val firstFiles = t.timeline.liveFiles(None).map(_.path)
     t.upsert(mkDf(row(1, "a2", ts = 2), row(2, "b2", ts = 2))) // replaces v1 files
@@ -1015,7 +1007,7 @@ class TableServicesSpec extends AnyFunSuite {
   }
 
   test("MERGE source carrying one key under two partitions commits one version") {
-    val t = LakeTable.create(spark, tmp(), props)
+    val t = LakeTable.create(spark, tmpPath("svc_"), props)
     t.upsert(mkDf(row(1, "a")))
     // same key, two partition values, different ordering values
     t.merge(Seq((1, "win", 5L, "d2"), (1, "lose", 2L, "d3"))
@@ -1026,7 +1018,7 @@ class TableServicesSpec extends AnyFunSuite {
   }
 
   test("no-op delete on a fresh schemaless table does not brick it") {
-    val t = LakeTable.create(spark, tmp(),
+    val t = LakeTable.create(spark, tmpPath("svc_"),
       TableProps("svc", Seq("id"), Some("ts"), Seq("dt")))
     t.delete(mkDf(row(99, "zz")).select("id", "dt")) // empty commit, ddl=""
     // schema() must tolerate the empty-DDL commit; the table stays usable
@@ -1049,7 +1041,7 @@ class TableServicesSpec extends AnyFunSuite {
   }
 
   test("clustering yields disjoint per-file key ranges and tighter probes") {
-    val t = LakeTable.create(spark, tmp(),
+    val t = LakeTable.create(spark, tmpPath("svc_"),
       TableProps("svc", Seq("id"), Some("ts"), Seq.empty))
     // interleaved mod-classes over a 3-digit key space (zero-padded so
     // utf8 order == numeric order): every commit's files span the
@@ -1083,7 +1075,7 @@ class TableServicesSpec extends AnyFunSuite {
   }
 
   test("z-order clustering yields tight per-file ranges on BOTH dimensions") {
-    val t = LakeTable.create(spark, tmp(),
+    val t = LakeTable.create(spark, tmpPath("svc_"),
       TableProps("svc", Seq("id"), Some("ts"), Seq.empty))
     // a 64x64 grid: after z-ordering into 16 files each file should
     // hold roughly one quadrant tile — tight on a AND b; a LINEAR sort
@@ -1108,7 +1100,7 @@ class TableServicesSpec extends AnyFunSuite {
   }
 
   test("restoreTo rewinds state, preserves history, and stays restorable") {
-    val t = LakeTable.create(spark, tmp(), props)
+    val t = LakeTable.create(spark, tmpPath("svc_"), props)
     val c1 = t.upsert(mkDf(row(1, "a"), row(2, "b")))
     t.upsert(mkDf(row(2, "b2", 2L), row(3, "c", 2L)))
     val c3 = t.delete(mkDf(row(1, "a")).select("id", "dt"))
@@ -1160,7 +1152,7 @@ class TableServicesSpec extends AnyFunSuite {
     // a broken prune would plan all ~64 files — and (3) the full
     // snapshot count stays exact across the churn.
     val nPart = 64
-    val t = LakeTable.create(spark, tmp(), props)
+    val t = LakeTable.create(spark, tmpPath("svc_"), props)
     def batch(ts: Long) = spark.range(nPart * 4L).select(
       col("id").cast("int").as("id"),
       md5(col("id").cast("string")).as("v"),
@@ -1192,7 +1184,7 @@ class TableServicesSpec extends AnyFunSuite {
     // must converge to exactly what applying the 8 batches
     // sequentially (any order — keys disjoint) would produce, with
     // bounded retry amplification.
-    val path = tmp()
+    val path = tmpPath("svc_")
     LakeTable.create(spark, path, props)
       .upsert(mkDf((1 to 200).map(i => row(i, "v0")): _*))
     import scala.concurrent.{Await, ExecutionContext, Future}
